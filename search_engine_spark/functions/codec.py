@@ -16,8 +16,11 @@ max score is ``idf(term) * max_stf`` (idf attaches from the dictionary;
 block-max WAND upper bounds are exact, not heuristic).
 
 Varbyte: little-endian 7-bit groups, MSB set = continuation.
-Encode is plain Python (build-side, once); decode is numpy-vectorized
-(query-side hot path, Arrow batches).
+Encode is plain Python or numpy (build-side, once); decode is
+numpy-vectorized over a whole Arrow batch of blocks
+(:func:`vb_decode_many`) and runs once per query engine, when its
+decoded blocks view is cached — queries then score the decoded arrays
+with the Column form :func:`bm25_stf_col` in the JVM.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ from __future__ import annotations
 from typing import Iterator, List, Sequence, Tuple
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
 def vb_encode(values: Sequence[int]) -> bytes:
@@ -96,6 +101,28 @@ def vb_decode(data: bytes) -> np.ndarray:
     return vals
 
 
+def vb_decode_many(
+    payloads: Sequence[bytes], prefix_sum: bool = False
+) -> List[np.ndarray]:
+    """Decode many varbyte payloads in one vectorized pass -> one int64
+    array per payload. ``prefix_sum`` turns each payload's
+    (first, gap, gap, ...) into doc_ids, like :func:`decode_gaps`."""
+    if not len(payloads):
+        return []
+    lens = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
+    raw = b"".join(payloads)
+    vals = vb_decode(raw)
+    # value offsets per payload: values end at bytes without the MSB
+    n_ended = np.zeros(len(raw) + 1, dtype=np.int64)
+    np.cumsum(np.frombuffer(raw, dtype=np.uint8) < 0x80, out=n_ended[1:])
+    offs = n_ended[np.concatenate(([0], np.cumsum(lens)))]
+    if prefix_sum:
+        run = np.cumsum(vals)
+        start_run = np.concatenate(([0], run))[offs[:-1]]
+        vals = run - np.repeat(start_run, np.diff(offs))
+    return np.split(vals, offs[1:-1])
+
+
 def encode_gaps(doc_ids: np.ndarray) -> bytes:
     """Strictly-increasing doc_ids -> varbyte(first, then gaps)."""
     d = np.asarray(doc_ids, dtype=np.int64)
@@ -119,6 +146,14 @@ def bm25_stf(tf: np.ndarray, doc_len: np.ndarray, avgdl: float, k1: float, b: fl
     dl = np.asarray(doc_len, dtype=np.float64)
     denom = tf + k1 * (1.0 - b + b * dl / avgdl)
     return tf / denom
+
+
+def bm25_stf_col(
+    tf: Column, doc_len: Column, avgdl: float, k1: float, b: float
+) -> Column:
+    """Column form of :func:`bm25_stf`: the same operations in the same
+    order, so a JVM-evaluated score is bit-identical to the numpy one."""
+    return tf / (tf + F.lit(k1) * (1.0 - b + F.lit(b) * doc_len / F.lit(avgdl)))
 
 
 def build_blocks(

@@ -4,9 +4,13 @@ Spark lifecycle (SURVEY.md §3.2): the driver parses the query
 (microseconds) and compiles the AST into a DataFrame plan — term leaves
 are term-predicate scans of the ``blocks`` table (parquet predicate
 pushdown prunes row groups by the sorted ``term`` column), AND/OR/NOT
-become joins/unions/anti-joins on doc_id, scoring decompresses blocks in
-a vectorized mapInPandas and computes exact BM25; top-k is
-``orderBy(score desc, doc_id asc).limit(k)`` (Spark TakeOrdered).
+become joins/unions/anti-joins on doc_id. Blocks stay varbyte at rest;
+the engine reads them through ``decoded_view`` (scalar pandas UDFs turn
+the payloads into arrays), caches that view so each block is decoded
+once per engine, and scores it in the JVM: ``explode(arrays_zip(...))``
+plus the Column BM25 ``codec.bm25_stf_col`` — a warm query starts no
+Python worker. Top-k is ``orderBy(score desc, doc_id asc).limit(k)``
+(Spark TakeOrdered).
 
 Boolean semantics are the reference bitmap algebra (query_evaluator.cpp
 :192-238) re-expressed as doc-id set dataflow — at 10^12 docs bitmaps
@@ -33,13 +37,15 @@ from __future__ import annotations
 import math
 import time
 from functools import reduce
-from typing import Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Dict, Iterable, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.functions import codec
@@ -52,25 +58,35 @@ _SCORE_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+_PAYLOADS = ("doc_gaps", "tfs", "dls")
 
 
-def _decode_score_map(idf: float, k1: float, b: float, avgdl: float):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs_d, outs_s = [], []
-            for gaps, tfb, dlb in zip(pdf["doc_gaps"], pdf["tfs"], pdf["dls"]):
-                d, t, dl = codec.decode_block(bytes(gaps), bytes(tfb), bytes(dlb))
-                outs_d.append(d)
-                outs_s.append(idf * codec.bm25_stf(t, dl, avgdl, k1, b))
-            if outs_d:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(outs_d),
-                        "score": np.concatenate(outs_s),
-                    }
-                )
+# module-level UDFs: every engine's view compiles to the same plan, so
+# engines over one index share one cache entry
+@F.pandas_udf(T.ArrayType(T.LongType()))
+def _decode_doc_ids(doc_gaps: pd.Series) -> pd.Series:
+    return pd.Series(codec.vb_decode_many(doc_gaps, prefix_sum=True), dtype=object)
 
-    return fn
+
+@F.pandas_udf(T.ArrayType(T.IntegerType()))
+def _decode_ints(payloads: pd.Series) -> pd.Series:
+    return pd.Series(
+        [v.astype(np.int32) for v in codec.vb_decode_many(payloads)], dtype=object
+    )
+
+
+def decoded_view(blocks: DataFrame) -> DataFrame:
+    """The blocks stage with its varbyte payloads decoded: ``doc_gaps``
+    becomes the block's doc_ids (array<long>, the gaps prefix-summed),
+    ``tfs``/``dls`` become array<int>. A projection over the scan, so
+    term/block_id/max_score predicates still push into Parquet, and a
+    metadata-only select prunes the decode away."""
+    return blocks.select(
+        *[c for c in blocks.columns if c not in _PAYLOADS],
+        _decode_doc_ids("doc_gaps").alias("doc_gaps"),
+        _decode_ints("tfs").alias("tfs"),
+        _decode_ints("dls").alias("dls"),
+    )
 
 
 def phrase_ordinal_candidates(
@@ -134,7 +150,7 @@ class SearchEngine:
         # vocabulary size from build-time stats — lets analytics skip
         # their dictionary-size probe job (ADVICE r2); None if absent
         self.n_terms = (meta.get("stats") or {}).get("total_terms") or None
-        self.blocks = self.store.read_stage(spark, "blocks")
+        self.blocks = decoded_view(self.store.read_stage(spark, "blocks"))
         self.docmeta = self.store.read_stage(spark, "docmeta")
         self.dictionary = self.store.read_stage(spark, "dictionary")
         self.postings = (
@@ -143,7 +159,8 @@ class SearchEngine:
             else None
         )
         if cache:
-            # hot query-side tables; blocks/docmeta are the per-query scans
+            # hot query-side tables; blocks/docmeta are the per-query
+            # scans. Caching the decoded view decodes each block once.
             self.blocks = self.blocks.cache()
             self.docmeta = self.docmeta.cache()
         self.query_log: List[dict] = []
@@ -164,6 +181,16 @@ class SearchEngine:
             for t in missing:
                 cache[t] = found.get(t, (0, 0))
         return {t: cache[t] for t in terms}
+
+    def _local(self, rows: list, schema: T.StructType) -> DataFrame:
+        """A driver-side frame sent through Arrow: a LocalRelation, so
+        reading it starts no Python worker (a list-built createDataFrame
+        runs a Python task per partition to unpickle its rows)."""
+        names = schema.fieldNames()
+        table = pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+        )
+        return self.spark.createDataFrame(table, schema)
 
     def idf(self, df: int) -> float:
         return math.log((self.n_docs - df + 0.5) / (df + 0.5) + 1.0)
@@ -216,19 +243,30 @@ class SearchEngine:
         return None
 
     # -- leaf: one term's (doc_id, score) -------------------------------
+    def _block_scores(self, blk: DataFrame, idf: Union[float, Column]) -> DataFrame:
+        """(doc_id, score) for every posting of ``blk``'s decoded blocks:
+        one row per posting, BM25 as a Column expression. ``idf`` is the
+        driver's ``math.log`` value (a literal, so scores stay
+        bit-identical with the stored ``max_score`` bounds) or a Column
+        over ``blk``'s rows."""
+        p = blk.select(
+            F.lit(idf).alias("idf"), F.explode(F.arrays_zip(*_PAYLOADS)).alias("p")
+        )
+        stf = codec.bm25_stf_col(
+            F.col("p.tfs"), F.col("p.dls"), self.avgdl, self.cfg.k1, self.cfg.b
+        )
+        return p.select(
+            F.col("p.doc_gaps").alias("doc_id"),
+            (F.col("idf") * stf).alias("score"),
+        )
+
     def _term_scores(self, term: str, df: Optional[int] = None) -> DataFrame:
         if df is None:
             df = self.term_stats([term]).get(term, (0, 0))[0]
         if df == 0:
-            return self.spark.createDataFrame([], _SCORE_SCHEMA)
-        idf = self.idf(df)
-        blk = self.blocks.filter(F.col("term") == term).select(
-            "doc_gaps", "tfs", "dls"
-        )
-        return blk.mapInPandas(
-            _decode_score_map(idf, self.cfg.k1, self.cfg.b, self.avgdl),
-            schema=_SCORE_SCHEMA,
-        )
+            return self._local([], _SCORE_SCHEMA)
+        blk = self.blocks.filter(F.col("term") == term)
+        return self._block_scores(blk, self.idf(df))
 
     def _term_scores_topk_pruned(
         self,
@@ -281,13 +319,11 @@ class SearchEngine:
                 "theta": None,
             }
             return self._term_scores(term, df)
-        dec = _decode_score_map(idf, self.cfg.k1, self.cfg.b, self.avgdl)
-        p1 = (
+        p1 = self._block_scores(
             self.blocks.filter(
                 (F.col("term") == term) & F.col("block_id").isin(phase1_ids)
-            )
-            .select("doc_gaps", "tfs", "dls")
-            .mapInPandas(dec, schema=_SCORE_SCHEMA)
+            ),
+            idf,
         )
         if allowed is not None:
             p1 = p1.join(allowed, "doc_id", "leftsemi")
@@ -311,10 +347,8 @@ class SearchEngine:
         p2_meta_pred = (~F.col("block_id").isin(phase1_ids)) & (
             F.col("max_score") >= theta - eps
         )
-        p2 = (
-            self.blocks.filter((F.col("term") == term) & p2_meta_pred)
-            .select("doc_gaps", "tfs", "dls")
-            .mapInPandas(dec, schema=_SCORE_SCHEMA)
+        p2 = self._block_scores(
+            self.blocks.filter((F.col("term") == term) & p2_meta_pred), idf
         )
         self._last_wand_stats = {
             "total_blocks": nb_total,
@@ -325,7 +359,7 @@ class SearchEngine:
             ),
             "theta": theta,
         }
-        p1df = self.spark.createDataFrame(
+        p1df = self._local(
             [(r["doc_id"], r["score"]) for r in topk1], _SCORE_SCHEMA
         )
         return p1df.unionByName(p2)
@@ -337,7 +371,7 @@ class SearchEngine:
         if self.postings is None:
             raise RuntimeError("positions not stored; rebuild with store_positions")
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long")
+            return self._local([], _SCORE_SCHEMA[:1])
         parts = []
         for i, t in enumerate(terms):
             parts.append(
@@ -370,33 +404,6 @@ class SearchEngine:
             if l is not None and r is not None:
                 return l + r
         return None
-
-    def _decode_score_map_multi(self, idfs: Dict[str, float]):
-        """Multi-term block decoder: per-row idf looked up by term."""
-        k1, b, avgdl = self.cfg.k1, self.cfg.b, self.avgdl
-
-        def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs_d, outs_s = [], []
-                for term, gaps, tfb, dlb in zip(
-                    pdf["term"], pdf["doc_gaps"], pdf["tfs"], pdf["dls"]
-                ):
-                    d, t, dl = codec.decode_block(
-                        bytes(gaps), bytes(tfb), bytes(dlb)
-                    )
-                    outs_d.append(d)
-                    outs_s.append(
-                        idfs[term] * codec.bm25_stf(t, dl, avgdl, k1, b)
-                    )
-                if outs_d:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(outs_d),
-                            "score": np.concatenate(outs_s),
-                        }
-                    )
-
-        return fn
 
     def _or_scores_block_pruned(
         self,
@@ -435,12 +442,21 @@ class SearchEngine:
         terms = [t for t in terms if stats.get(t, (0, 0))[0] > 0]
         idfs = {t: self.idf(stats[t][0]) for t in terms}
         if not terms:
-            return self.spark.createDataFrame([], _SCORE_SCHEMA)
+            return self._local([], _SCORE_SCHEMA)
         meta = self.blocks.filter(F.col("term").isin(terms)).select(
             "term", "block_id", "doc_count", "max_score"
         )
-        dec = self._decode_score_map_multi(idfs)
-        blk_cols = ["term", "doc_gaps", "tfs", "dls"]
+        # per-row idf: a literal term -> idf map looked up by the block's term
+        idf_col = F.create_map(
+            *[F.lit(x) for t in terms for x in (t, idfs[t])]
+        )[F.col("term")]
+
+        def summed(blk: DataFrame) -> DataFrame:
+            return (
+                self._block_scores(blk, idf_col)
+                .groupBy("doc_id")
+                .agg(F.sum("score").alias("score"))
+            )
 
         # ONE metadata job: per-term top-k blocks (partitioned window —
         # bounded) whose rn==1 rows also carry each term's upper bound.
@@ -472,13 +488,8 @@ class SearchEngine:
                 for t, ids in p1_by_term.items()
             ],
         )
-        p1_scores = (
-            self.blocks.filter(F.col("term").isin(terms))
-            .filter(p1_pred)
-            .select(*blk_cols)
-            .mapInPandas(dec, schema=_SCORE_SCHEMA)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
+        p1_scores = summed(
+            self.blocks.filter(F.col("term").isin(terms)).filter(p1_pred)
         )
         if allowed is not None:
             p1_scores = p1_scores.join(allowed, "doc_id", "leftsemi")
@@ -497,13 +508,7 @@ class SearchEngine:
                 "decoded_blocks": total_blocks,
                 "theta": None,
             }
-            return (
-                self.blocks.filter(F.col("term").isin(terms))
-                .select(*blk_cols)
-                .mapInPandas(dec, schema=_SCORE_SCHEMA)
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("score"))
-            )
+            return summed(self.blocks.filter(F.col("term").isin(terms)))
         theta = topk1[-1]["score"]
         # epsilon slack: (a+b)−a ≠ b in doubles; keeping extra blocks is
         # always safe, pruning a tying block is not
@@ -527,13 +532,8 @@ class SearchEngine:
             ),
             "theta": theta,
         }
-        return (
-            self.blocks.filter(F.col("term").isin(terms))
-            .filter(keep_pred)
-            .select(*blk_cols)
-            .mapInPandas(dec, schema=_SCORE_SCHEMA)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
+        return summed(
+            self.blocks.filter(F.col("term").isin(terms)).filter(keep_pred)
         )
 
     def _and_scores_block_pruned(
@@ -545,7 +545,7 @@ class SearchEngine:
         posting list, so its doc_id lies inside one of that term's
         block [min_doc, max_doc] ranges. Those ranges (df/block_size
         rows — driver-sized) broadcast against the other terms' block
-        METADATA; blocks outside every range never decompress. This is
+        METADATA; blocks outside every range are never scored. This is
         the distributed analogue of doc-at-a-time WAND skipping plus
         the reference report's smaller-operand-first AND ordering
         (report/main.tex:799-810, claimed there, real here) — and it is
@@ -554,23 +554,22 @@ class SearchEngine:
         order = sorted(terms, key=lambda t: stats.get(t, (0, 0))[0])
         rare = order[0]
         if stats.get(rare, (0, 0))[0] == 0:
-            return self.spark.createDataFrame([], _SCORE_SCHEMA)
+            return self._local([], _SCORE_SCHEMA)
         ranges = (
             self.blocks.filter(F.col("term") == rare)
             .select("min_doc", "max_doc")
             .collect()
         )
         rng_df = F.broadcast(
-            self.spark.createDataFrame(
+            self._local(
                 [(r["min_doc"], r["max_doc"]) for r in ranges],
-                "lo long, hi long",
+                T.StructType(
+                    [T.StructField(c, T.LongType()) for c in ("lo", "hi")]
+                ),
             )
         )
         parts = []
         for i, t in enumerate(order):
-            df = stats[t][0]
-            idf = self.idf(df)
-            dec = _decode_score_map(idf, self.cfg.k1, self.cfg.b, self.avgdl)
             blk = self.blocks.filter(F.col("term") == t)
             if i > 0:
                 # keep blocks overlapping ANY rare-term range
@@ -582,9 +581,7 @@ class SearchEngine:
                         "leftsemi",
                     )
                 )
-            scored = blk.select("doc_gaps", "tfs", "dls").mapInPandas(
-                dec, schema=_SCORE_SCHEMA
-            )
+            scored = self._block_scores(blk, self.idf(stats[t][0]))
             parts.append(scored.withColumnRenamed("score", f"s{i}"))
         joined = reduce(lambda a, b: a.join(b, "doc_id", "inner"), parts)
         total = reduce(
@@ -724,13 +721,9 @@ class SearchEngine:
         )
 
         def leaf(t: str, blk_pred) -> DataFrame:
-            dec = _decode_score_map(
-                self.idf(stats[t][0]), self.cfg.k1, self.cfg.b, self.avgdl
-            )
-            return (
-                self.blocks.filter((F.col("term") == t) & blk_pred)
-                .select("doc_gaps", "tfs", "dls")
-                .mapInPandas(dec, schema=_SCORE_SCHEMA)
+            return self._block_scores(
+                self.blocks.filter((F.col("term") == t) & blk_pred),
+                self.idf(stats[t][0]),
             )
 
         p1_frames = {
@@ -810,9 +803,7 @@ class SearchEngine:
                 # a whitespace-only quoted phrase parses to Phrase(())
                 # — matches nothing (reduce over zero score parts would
                 # otherwise raise)
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score double"
-                )
+                return self._local([], _SCORE_SCHEMA)
             cand = self._phrase_candidates(node.terms, node.proximity)
             score_parts = [
                 self._eval(qp.Term(t), stats).withColumnRenamed("score", "s")
@@ -899,7 +890,7 @@ class SearchEngine:
         """(doc_id, score) for every matching document."""
         ast = qp.parse(query)
         if ast is None:
-            return self.spark.createDataFrame([], _SCORE_SCHEMA)
+            return self._local([], _SCORE_SCHEMA)
         stats = self.term_stats(qp.extract_terms(ast))
         return self._eval(ast, stats)
 
@@ -929,7 +920,7 @@ class SearchEngine:
         t0 = time.time()
         ast = qp.parse(query)
         if ast is None:
-            out = self.spark.createDataFrame([], _SCORE_SCHEMA)
+            out = self._local([], _SCORE_SCHEMA)
         else:
             allowed = None
             if meta_filter is not None:
@@ -967,7 +958,7 @@ class SearchEngine:
             ]
         )
         if not hit_rows:
-            return self.spark.createDataFrame([], enriched)
+            return self._local([], enriched)
         ids = [r["doc_id"] for r in hit_rows]
         meta = self.docmeta.filter(F.col("doc_id").isin(ids)).select(
             "doc_id", "url", "title"
@@ -977,7 +968,7 @@ class SearchEngine:
         data = [
             tuple(r) + lookup.get(r["doc_id"], (None, None)) for r in hit_rows
         ]
-        return self.spark.createDataFrame(data, enriched)
+        return self._local(data, enriched)
 
     def count(self, query: str) -> int:
         """Total matching docs (V9) — one plan, no re-evaluation (the
@@ -1058,16 +1049,14 @@ class SearchEngine:
             toks = [stem_text_token(t) for t in toks]
         terms = sorted(set(toks))
         if not terms:
-            return self.spark.createDataFrame([], _SCORE_SCHEMA)
+            return self._local([], _SCORE_SCHEMA)
         k1, b = self.cfg.k1, self.cfg.b
         idf_col = F.log(
             (F.lit(float(self.n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
             + 1.0
         )
-        stf_col = F.col("tf") / (
-            F.col("tf")
-            + F.lit(k1)
-            * (1.0 - b + F.lit(b) * F.col("doc_len") / F.lit(self.avgdl))
+        stf_col = codec.bm25_stf_col(
+            F.col("tf"), F.col("doc_len"), self.avgdl, k1, b
         )
         dict_small = self.dictionary.filter(F.col("term").isin(terms)).select(
             "term", "df"
@@ -1119,7 +1108,7 @@ class SearchEngine:
             list(hits.schema.fields)
             + [T.StructField("text", T.StringType(), True)]
         )
-        with_text = self.spark.createDataFrame(
+        with_text = self._local(
             [tuple(r) + (text_by_id.get(r["doc_id"]),) for r in hit_rows],
             with_text_schema,
         )

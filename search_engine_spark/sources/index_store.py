@@ -16,7 +16,11 @@ Layout (parquet fallback)::
       postings/        (term, doc_id, tf, doc_len[, positions])  sorted runs
       dictionary/      (term, df, cf)
       blocks/          (term, block_id, doc_count, min_doc, max_doc,
-                        max_tf, max_stf, max_score, doc_gaps, tfs)
+                        max_tf, max_stf, max_score, doc_gaps, tfs, dls)
+                       doc_gaps/tfs/dls stay varbyte at rest; a query
+                       engine decodes them once into its cached view
+                       (``query_eval.decoded_view``) and scores that
+                       in the JVM
 
 ``manifest.json`` is the checkpoint/resume protocol (modeled on the
 reference crawler's JSON state, ``url_manager.py:197-251``): a stage is

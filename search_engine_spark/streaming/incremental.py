@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
+from search_engine_spark.functions.codec import bm25_stf_col
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -434,7 +435,7 @@ class IncrementalIndexer:
                          n: float, avgdl: float) -> DataFrame:
         """One term's (doc_id, score) over the long-form segment
         postings: bucket-pruned at rest + closed-form BM25 column (the
-        same expression as SearchEngine.more_like_this)."""
+        batch engine's ``codec.bm25_stf_col``)."""
         k1, b = self.cfg.k1, self.cfg.b
         hits = postings
         if self.postings_buckets:
@@ -449,14 +450,7 @@ class IncrementalIndexer:
             "doc_id",
             (
                 F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-                * (
-                    F.col("tf")
-                    / (
-                        F.col("tf")
-                        + F.lit(k1)
-                        * (1.0 - b + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-                    )
-                )
+                * bm25_stf_col(F.col("tf"), F.col("doc_len"), avgdl, k1, b)
             ).alias("score"),
         )
 

@@ -5,8 +5,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from search_engine_spark.functions.codec import (
-    bm25_stf, build_blocks, decode_block, decode_gaps, encode_gaps,
-    vb_decode, vb_encode,
+    bm25_stf, bm25_stf_col, build_blocks, decode_block, decode_gaps,
+    encode_gaps, vb_decode, vb_decode_many, vb_encode,
 )
 
 
@@ -28,6 +28,52 @@ def test_gap_roundtrip(gaps):
 def test_empty():
     assert vb_decode(b"").tolist() == []
     assert encode_gaps(np.array([], dtype=np.int64)) == b""
+
+
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**40), max_size=40),
+        max_size=30,
+    )
+)
+@settings(max_examples=100, deadline=None)
+def test_vb_decode_many_matches_per_payload(seqs):
+    payloads = [vb_encode(v) for v in seqs]
+    assert [a.tolist() for a in vb_decode_many(payloads)] == seqs
+    assert [a.tolist() for a in vb_decode_many(payloads, prefix_sum=True)] == [
+        decode_gaps(p).tolist() for p in payloads
+    ]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=10_000),     # tf
+            st.integers(min_value=1, max_value=1_000_000),  # doc_len
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    st.floats(min_value=0.5, max_value=1e5),  # avgdl
+    st.floats(min_value=0.0, max_value=3.0),  # k1
+    st.floats(min_value=0.0, max_value=1.0),  # b
+)
+@settings(max_examples=15, deadline=None)
+def test_bm25_stf_col_bit_identical_to_numpy(spark, rows, avgdl, k1, b):
+    """The JVM Column form of the BM25 tf factor equals the numpy form
+    bit for bit — batch scores are computed by the former and block
+    max_score bounds by the latter."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, "tf int, dl int")
+    got = [
+        r[0]
+        for r in df.select(
+            bm25_stf_col(F.col("tf"), F.col("dl"), avgdl, k1, b)
+        ).collect()
+    ]
+    tf, dl = np.array(rows, dtype=np.int64).T
+    assert got == bm25_stf(tf, dl, avgdl, k1, b).tolist()
 
 
 @given(
