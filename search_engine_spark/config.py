@@ -47,7 +47,6 @@ class EngineConfig:
     salt_df_threshold: int = 100_000   # df above this → salted posting-list split
     salt_buckets: int = 8
     store_positions: bool = True       # positions table for phrase/proximity
-    store_raw_postings: bool = False   # debug: keep uncompressed postings table
 
     # extraction
     min_article_length: int = 0        # reference crawl-filter default is 1000 (config.yaml:50);

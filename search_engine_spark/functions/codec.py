@@ -25,6 +25,7 @@ with the Column form :func:`bm25_stf_col` in the JVM.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, List, Sequence, Tuple
 
 import numpy as np
@@ -154,6 +155,21 @@ def bm25_stf_col(
     """Column form of :func:`bm25_stf`: the same operations in the same
     order, so a JVM-evaluated score is bit-identical to the numpy one."""
     return tf / (tf + F.lit(k1) * (1.0 - b + F.lit(b) * doc_len / F.lit(avgdl)))
+
+
+def bm25_idf(n: float, df: float) -> float:
+    """Lucene-style non-negative BM25 idf over ``n`` docs. ``math.log``:
+    the build bakes this value into block ``max_score`` and batch
+    queries pass it as a literal, so scores stay bit-identical with
+    those bounds."""
+    return math.log((n - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def bm25_idf_col(n: float, df: Column) -> Column:
+    """Column form of :func:`bm25_idf`, for scorers that read df from a
+    table. JVM ``log`` may differ from ``math.log`` by 1 ulp, so it must
+    not score against stored ``max_score`` bounds."""
+    return F.log((F.lit(float(n)) - df + 0.5) / (df + 0.5) + 1.0)
 
 
 def build_blocks(

@@ -16,8 +16,6 @@ Semantics (byte-oriented, like ``ds::String``):
 
 from __future__ import annotations
 
-import pandas as pd
-
 from search_engine_spark.functions.tokenizer import _LOWER_TABLE
 
 
@@ -33,8 +31,3 @@ def stem_bytes(word: bytes) -> bytes:
 
 def stem_text_token(token: str) -> str:
     return stem_bytes(token.encode("utf-8")).decode("utf-8", errors="replace")
-
-
-def stem_series(s: pd.Series) -> pd.Series:
-    """Vectorized: Series[str token] -> Series[str stem]."""
-    return s.map(lambda t: stem_text_token(t) if isinstance(t, str) else t)

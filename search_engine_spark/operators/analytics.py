@@ -258,20 +258,19 @@ def export_zipf(ranked: DataFrame, out_dir: str, top: int = 1000) -> dict:
 
 def plot_zipf(ranked: DataFrame, out_path: str, top: int = 1000) -> bool:
     """Z13 (visualizer.py:30-146): log-log rank/frequency plot of the
-    driver-sized top slice. matplotlib is optional in this environment —
-    returns False when unavailable."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-    except ImportError:
+    driver-sized top slice. Same matplotlib-or-data-file contract as
+    the other plots."""
+    rows = ranked.orderBy("rank").limit(top).collect()
+    data = {
+        "ranks": [int(r["rank"]) for r in rows],
+        "freqs": [int(r["freq"]) for r in rows],
+    }
+    plt = _try_matplotlib()
+    if plt is None:
+        _dump_plot_data(out_path, data)
         return False
-    rows = ranked.limit(top).collect()
-    ranks = [r["rank"] for r in rows]
-    freqs = [r["freq"] for r in rows]
     fig, ax = plt.subplots(figsize=(8, 5))
-    ax.loglog(ranks, freqs, marker=".", linestyle="none")
+    ax.loglog(data["ranks"], data["freqs"], marker=".", linestyle="none")
     ax.set_xlabel("rank")
     ax.set_ylabel("frequency")
     ax.set_title("Zipf rank-frequency")

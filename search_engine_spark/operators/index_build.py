@@ -200,14 +200,6 @@ def global_ordinal(df: DataFrame, sort_cols, col_name: str = "_ord",
     return out
 
 
-def assign_doc_ids(spark: SparkSession, docs: DataFrame, partitions: int) -> DataFrame:
-    """Deterministic dense doc_id = rank of url in global url order
-    (SURVEY §7.1) — the standalone form; ``build_docs`` fuses this
-    into the extraction shuffle instead."""
-    return global_ordinal(docs, [F.col("url").asc()], "doc_id",
-                          max(1, min(partitions, 200)))
-
-
 def _add_partition_offset_ids(spark: SparkSession, ranged: DataFrame,
                               col_name: str = "doc_id") -> DataFrame:
     """Two-pass dense ordinal ids over an already-sorted, persisted
@@ -581,8 +573,6 @@ def _block_builder(cfg: EngineConfig, n_docs: int, avgdl: float):
     overhead at dictionary scale. Output rows are byte-identical
     (pinned by test_codec's builder-equivalence test).
     """
-    import math
-
     k1, b, bs = cfg.k1, cfg.b, cfg.block_size
 
     def emit_batch(pdf: pd.DataFrame, rows: list) -> None:
@@ -608,12 +598,12 @@ def _block_builder(cfg: EngineConfig, n_docs: int, avgdl: float):
         max_tf = np.maximum.reduceat(tf, bstarts)
         max_stf = np.maximum.reduceat(codec.bm25_stf(tf, dl, avgdl, k1, b),
                                       bstarts)
-        # idf per group — math.log (not np.log) so stored max_score
-        # stays bit-identical with the query path's Python idf
+        # idf per group — codec.bm25_idf (math.log, not np.log) so
+        # stored max_score stays bit-identical with the query path's idf
         gsizes = np.append(gstarts[1:], m) - gstarts
         df_g = np.where(np.isnan(dfv[gstarts]), gsizes, dfv[gstarts])
         idf_g = np.fromiter(
-            (math.log((n_docs - d + 0.5) / (d + 0.5) + 1.0) for d in df_g),
+            (codec.bm25_idf(n_docs, d) for d in df_g),
             dtype=np.float64, count=len(df_g),
         )
         max_score = idf_g[gidx[bstarts]] * max_stf

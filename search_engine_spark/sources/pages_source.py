@@ -226,14 +226,6 @@ def text_file_pages(spark, path: str):
     return out
 
 
-def write_pages_parquet(path: str, n_docs: int, seed: int = 42, **kw) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = generate_pages_pdf(n_docs=n_docs, seed=seed, **kw)
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-
-
 def upsert_pages(base, updates):
     """S4 (database_handler.py:72-118 — Mongo upsert by url) as a
     MERGE-shaped DataFrame op: rows whose url exists in ``updates``

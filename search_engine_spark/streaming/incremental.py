@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from search_engine_spark.functions.codec import bm25_stf_col
+from search_engine_spark.functions.codec import bm25_idf_col, bm25_stf_col
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -431,95 +431,40 @@ class IncrementalIndexer:
         ).collect()[0]
         return float(agg["n"]), float(agg["avgdl"] or 1.0)
 
+    def _term_hits(self, postings: DataFrame, term: str) -> DataFrame:
+        """One term's segment postings rows: term-bucket pruned at rest,
+        then term-filtered."""
+        if self.postings_buckets:
+            postings = postings.filter(
+                F.col("term_bucket")
+                == _term_bucket_py(term, self.postings_buckets)
+            )
+        return postings.filter(F.col("term") == term)
+
     def _term_scores_seg(self, postings: DataFrame, term: str,
                          n: float, avgdl: float) -> DataFrame:
         """One term's (doc_id, score) over the long-form segment
         postings: bucket-pruned at rest + closed-form BM25 column (the
         batch engine's ``codec.bm25_stf_col``)."""
         k1, b = self.cfg.k1, self.cfg.b
-        hits = postings
-        if self.postings_buckets:
-            hits = hits.filter(
-                F.col("term_bucket")
-                == _term_bucket_py(term, self.postings_buckets)
-            )
-        hits = hits.filter(F.col("term") == term)
+        hits = self._term_hits(postings, term)
         self._last_postings_scan = hits  # plan-shape tests
         dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
         return hits.join(F.broadcast(dfreq), "term").select(
             "doc_id",
             (
-                F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+                bm25_idf_col(n, F.col("df"))
                 * bm25_stf_col(F.col("tf"), F.col("doc_len"), avgdl, k1, b)
             ).alias("score"),
         )
 
-    def _phrase_scores_seg(self, postings: DataFrame, terms, prox,
-                           n: float, avgdl: float) -> DataFrame:
-        """Phrase / proximity leaf over the long-form segment postings —
-        the batch engine's exact semantics (`SearchEngine._eval`'s
-        Phrase branch): candidates are docs where the terms' token
-        ordinals are consecutive (or within a +prox window of the first
-        term), the leaf's score is the SUM of the member terms' BM25
-        scores. Each per-term scan is bucket+term-pruned at rest like
-        every other streaming leaf; the ordinal check is the same
-        JVM-side ``exists``/``array_contains`` expression the batch
-        ``_phrase_candidates`` compiles — no Python in the hot path."""
-        from functools import reduce as _reduce
-
-        if "positions" not in postings.columns:
-            raise RuntimeError(
-                "phrase/proximity queries need token ordinals — rebuild "
-                "the stream with store_positions=True (or compact() and "
-                "use SearchEngine)"
-            )
-        if not terms:
-            # whitespace-only quoted phrase → Phrase(()) — matches
-            # nothing (same guard as the batch Phrase branch)
-            return self.spark.createDataFrame([], "doc_id long, score double")
-
-        def term_hits(t: str) -> DataFrame:
-            hits = postings
-            if self.postings_buckets:
-                hits = hits.filter(
-                    F.col("term_bucket")
-                    == _term_bucket_py(t, self.postings_buckets)
-                )
-            return hits.filter(F.col("term") == t)
-
-        from search_engine_spark.operators.query_eval import (
-            phrase_ordinal_candidates,
-        )
-
-        parts = [
-            term_hits(t).select("doc_id", F.col("positions").alias(f"p{i}"))
-            for i, t in enumerate(terms)
-        ]
-        # the ordinal condition compiles in ONE place, shared with the
-        # batch engine — only the per-term frame source (bucket+term
-        # pruned segment scans) differs here
-        cand = phrase_ordinal_candidates(parts, prox)
-        score_parts = [
-            self._term_scores_seg(postings, t, n, avgdl).withColumnRenamed(
-                "score", "s"
-            )
-            for t in terms
-        ]
-        scores = (
-            _reduce(DataFrame.unionByName, score_parts)
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("score"))
-        )
-        return cand.join(scores, "doc_id", "inner").select("doc_id", "score")
-
     def search_query(self, query: str, k: int = 10) -> DataFrame:
         """Boolean BM25 top-k over the live segments — the batch
-        engine's score algebra (AND/OR sum their children's scores,
-        NOT contributes 0 over the doc universe, phrase/proximity
-        leaves match on token ordinals and score as the sum of their
-        member terms, ties doc_id asc) evaluated relationally on the
-        long-form postings. Each term leaf is a bucket+term-pruned
-        scan; NOT anti-joins the segment docmeta."""
+        engine's :func:`~search_engine_spark.operators.query_eval.eval_tree`
+        bound to the long-form postings: each term leaf and each phrase
+        member's positions is a bucket+term-pruned scan; NOT anti-joins
+        the segment docmeta."""
+        from search_engine_spark.operators.query_eval import eval_tree
         from search_engine_spark.plans import query_parser as qp
 
         ast = qp.parse(query)
@@ -528,35 +473,22 @@ class IncrementalIndexer:
         n, avgdl = self._corpus_stats()
         postings = self.postings()
 
-        def ev(node):
-            if isinstance(node, qp.Term):
-                return self._term_scores_seg(postings, node.term, n, avgdl)
-            if isinstance(node, qp.Phrase):
-                return self._phrase_scores_seg(
-                    postings, node.terms, node.proximity, n, avgdl
+        def positions(term: str) -> DataFrame:
+            if "positions" not in postings.columns:
+                raise RuntimeError(
+                    "phrase/proximity queries need token ordinals — rebuild "
+                    "the stream with store_positions=True (or compact() and "
+                    "use SearchEngine)"
                 )
-            if isinstance(node, qp.Not):
-                inner = ev(node.child)
-                return (
-                    self.docmeta().select("doc_id")
-                    .join(inner.select("doc_id"), "doc_id", "left_anti")
-                    .withColumn("score", F.lit(0.0))
-                )
-            l = ev(node.left).withColumnRenamed("score", "ls")
-            r = ev(node.right).withColumnRenamed("score", "rs")
-            if isinstance(node, qp.And):
-                return l.join(r, "doc_id", "inner").select(
-                    "doc_id", (F.col("ls") + F.col("rs")).alias("score")
-                )
-            return l.join(r, "doc_id", "full").select(
-                "doc_id",
-                (
-                    F.coalesce(F.col("ls"), F.lit(0.0))
-                    + F.coalesce(F.col("rs"), F.lit(0.0))
-                ).alias("score"),
-            )
+            return self._term_hits(postings, term).select("doc_id", "positions")
 
-        return ev(ast).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        scores = eval_tree(
+            ast,
+            lambda t: self._term_scores_seg(postings, t, n, avgdl),
+            positions,
+            lambda: self.docmeta().select("doc_id"),
+        )
+        return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def compact(self, out_dir: str):
         """Merge all segments into a batch IndexStore (blocks + dict)."""

@@ -76,6 +76,38 @@ def test_zipf_fit_on_exact_power_law(spark):
     assert fit["r2"] == pytest.approx(1.0, abs=1e-12)
 
 
+def test_heaps_law_known_values():
+    from search_engine_spark.operators.analytics import heaps_law
+
+    assert heaps_law(10_000) == pytest.approx(1000.0)  # 10 * 10_000^0.5
+    assert heaps_law(1_000, k=2.0, beta=1 / 3) == pytest.approx(20.0)
+
+
+def test_export_zipf_csv_and_constants(spark, tmp_path):
+    """S14: the rank/frequency CSV keeps its header row and the top
+    slice; the constants JSON is the full-table zipf_fit."""
+    import glob
+    import json
+
+    from search_engine_spark.operators.analytics import (
+        export_zipf,
+        zipf_fit,
+        zipf_rank_table,
+    )
+
+    rows = [(f"t{i:03d}", 1000 // (i + 1)) for i in range(50)]
+    ranked = zipf_rank_table(spark.createDataFrame(rows, "term string, freq long"))
+    consts = export_zipf(ranked, str(tmp_path), top=5)
+    (part,) = glob.glob(str(tmp_path / "rank_frequency" / "part-*.csv"))
+    lines = open(part).read().splitlines()
+    assert lines[0] == "rank,term,freq"
+    assert len(lines) == 1 + 5
+    fit = zipf_fit(ranked).collect()[0]
+    want = {"C": fit["c"], "s": fit["s"], "r_squared": fit["r2"]}
+    assert consts == want
+    assert json.load(open(tmp_path / "zipf_constants.json")) == want
+
+
 def test_vocabulary_growth(spark, docs):
     from search_engine_spark.operators.analytics import vocabulary_growth
 
@@ -223,6 +255,7 @@ def test_plot_data_fallbacks(spark, tmp_path):
         plot_distribution_comparison,
         plot_rank_frequency_bars,
         plot_vocabulary_growth,
+        plot_zipf,
         vocabulary_growth,
         zipf_rank_table,
     )
@@ -250,6 +283,11 @@ def test_plot_data_fallbacks(spark, tmp_path):
     assert plot_distribution_comparison(ranked, p3, top=20) is False
     d3 = json.load(open(p3 + ".json"))
     assert len(d3["actual"]) == 20 and d3["s"] > 0
+
+    p4 = str(tmp_path / "zipf.png")
+    assert plot_zipf(ranked, p4, top=30) is False
+    d4 = json.load(open(p4 + ".json"))
+    assert d4["ranks"] == list(range(1, 31)) and d4["freqs"][0] == 1000
 
 
 def test_alt_tokenizers_match_python_reference(spark):

@@ -1,12 +1,15 @@
 """Codec round-trip property tests (FIXTURES.md §5)."""
 
+import math
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from search_engine_spark.functions.codec import (
-    bm25_stf, bm25_stf_col, build_blocks, decode_block, decode_gaps,
-    encode_gaps, vb_decode, vb_decode_many, vb_encode,
+    bm25_idf, bm25_idf_col, bm25_stf, bm25_stf_col, build_blocks,
+    decode_block, decode_gaps, encode_gaps, vb_decode, vb_decode_many,
+    vb_encode,
 )
 
 
@@ -74,6 +77,35 @@ def test_bm25_stf_col_bit_identical_to_numpy(spark, rows, avgdl, k1, b):
     ]
     tf, dl = np.array(rows, dtype=np.int64).T
     assert got == bm25_stf(tf, dl, avgdl, k1, b).tolist()
+
+
+@given(
+    st.integers(min_value=1, max_value=10**12).flatmap(
+        lambda n: st.tuples(
+            st.just(n),
+            st.lists(st.integers(min_value=1, max_value=n), min_size=1,
+                     max_size=40),
+        )
+    )
+)
+@settings(max_examples=15, deadline=None)
+def test_bm25_idf_math_and_column_forms(spark, n_dfs):
+    """``bm25_idf`` is the exact ``math.log`` formula that block
+    ``max_score`` bounds are built with; its Column form may differ by
+    JVM ``log`` rounding, but by at most 1 ulp."""
+    from pyspark.sql import functions as F
+
+    n, dfs = n_dfs
+    want = [bm25_idf(n, d) for d in dfs]
+    assert want == [math.log((n - d + 0.5) / (d + 0.5) + 1.0) for d in dfs]
+    got = [
+        r[0]
+        for r in spark.createDataFrame([(d,) for d in dfs], "df long")
+        .select(bm25_idf_col(n, F.col("df")))
+        .collect()
+    ]
+    for d, g, w in zip(dfs, got, want):
+        assert abs(g - w) <= math.ulp(w), (n, d, g, w)
 
 
 @given(
