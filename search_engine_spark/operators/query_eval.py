@@ -32,10 +32,15 @@ and arbitrary mixed AND/OR/NOT trees route through
 ``_tree_scores_block_pruned`` (per-occurrence upper-bound sum +
 restricted-leaf phase 1), so no shape above ``wand_min_blocks`` pays a
 full multi-term block scan.
+
+Driver directory: a cached engine under ``DIRECTORY_MAX_ROWS`` (bound
+from meta.json) holds the dictionary, block metadata and hit (url, title)
+on the driver from open; otherwise each lookup is a scan per query.
 """
 
 from __future__ import annotations
 
+import math
 import time
 from functools import reduce
 from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple, Union
@@ -43,7 +48,7 @@ from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple, Un
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -60,6 +65,11 @@ _SCORE_SCHEMA = T.StructType(
     ]
 )
 _PAYLOADS = ("doc_gaps", "tfs", "dls")
+# most rows (dictionary + block metadata + docmeta) a cached engine
+# collects at open: measured on 4 cores (6k-140k rows) the load costs
+# ~0.4 CPU-s + 17 us/row and saves ~0.2 CPU-s per warm query, so six
+# queries repay it at 50k. tracemalloc: 224-481 B/row (224 on sf0.1 gate)
+DIRECTORY_MAX_ROWS = 50_000
 
 
 # module-level UDFs: every engine's view compiles to the same plan, so
@@ -202,6 +212,30 @@ def eval_tree(
     raise TypeError(node)
 
 
+def _directory_rows(meta: dict, cfg: EngineConfig) -> float:
+    """Upper bound, from meta.json alone, on the driver directory's rows:
+    terms + docs + blocks, where a (term, salt) group of n postings has
+    < n / block_size + 1 blocks and only a term with df above
+    ``salt_df_threshold`` spans more (<= ``salt_buckets``) groups."""
+    s = meta.get("stats") or {}
+    if s.get("total_terms") is None or s.get("total_postings") is None:
+        return math.inf  # no build stats: never load
+    terms, postings = s["total_terms"], s["total_postings"]
+    salted = min(terms, postings // (cfg.salt_df_threshold + 1))
+    groups = terms + salted * (cfg.salt_buckets - 1)
+    return terms + postings // cfg.block_size + groups + meta["n_docs"]
+
+
+def _ranked_block_meta(blocks: DataFrame) -> DataFrame:
+    """Block metadata, payloads dropped, with ``rn``: the block's rank in
+    its term by (max_score desc, block_id asc) — the exact phase-1
+    ordering every θ-pruned path uses."""
+    w = Window.partitionBy("term").orderBy(F.desc("max_score"), F.asc("block_id"))
+    return blocks.select(
+        "term", "block_id", "doc_count", "max_score", "min_doc", "max_doc"
+    ).withColumn("rn", F.row_number().over(w))
+
+
 def _flat_terms(node: qp.Node, op: type) -> Optional[List[str]]:
     """The terms of an AST that is a chain of ``op`` (``qp.And`` or
     ``qp.Or``) over plain terms, else None."""
@@ -244,14 +278,28 @@ class SearchEngine:
             self.blocks = self.blocks.cache()
             self.docmeta = self.docmeta.cache()
         self.query_log: List[dict] = []
+        # memos of the immutable index: term -> (df, cf), term -> (k,
+        # top-k ranked block rows), doc_id -> (url, title)
+        self._stats_cache, self._blockmeta_cache, self._hit_meta = {}, {}, {}
+        bound = _directory_rows(meta, self.cfg)
+        self.directory_loaded = cache and bound <= DIRECTORY_MAX_ROWS
+        if self.directory_loaded:
+            # fill the memos completely; block metadata from the raw
+            # stage, so no decode runs
+            for r in self.dictionary.select("term", "df", "cf").collect():
+                self._stats_cache[r["term"]] = (int(r["df"]), int(r["cf"]))
+            raw = self.store.read_stage(spark, "blocks")
+            self._memo_block_meta(_ranked_block_meta(raw).collect(), math.inf)
+            for r in self.docmeta.select("doc_id", "url", "title").collect():
+                self._hit_meta[r["doc_id"]] = (r["url"], r["title"])
 
     # -- dictionary lookups (driver-side, tiny) ------------------------
     def term_stats(self, terms: List[str]) -> Dict[str, Tuple[int, int]]:
         """(df, cf) per term; memoized — repeated query terms skip the
         dictionary scan (the index is immutable once built)."""
-        cache = getattr(self, "_stats_cache", None)
-        if cache is None:
-            cache = self._stats_cache = {}
+        cache = self._stats_cache
+        if self.directory_loaded:  # the whole dictionary: absent is (0, 0)
+            return {t: cache.get(t, (0, 0)) for t in terms}
         missing = [t for t in terms if t not in cache]
         if missing:
             rows = self.dictionary.filter(
@@ -287,41 +335,38 @@ class SearchEngine:
         terms so a B-query batch pays one block-metadata job instead of
         one per query (VERDICT r4 #5). The index is immutable, so
         entries never invalidate — only a larger k refetches."""
-        from pyspark.sql import Window
-
-        cache = getattr(self, "_blockmeta_cache", None)
-        if cache is None:
-            cache = self._blockmeta_cache = {}
+        if self.directory_loaded:
+            return  # it holds every block
+        cache = self._blockmeta_cache
         missing = [
             t for t in dict.fromkeys(terms)
             if t not in cache or cache[t][0] < k
         ]
         if not missing:
             return
-        w = Window.partitionBy("term").orderBy(
-            F.desc("max_score"), F.asc("block_id")
-        )
         rows = (
-            self.blocks.filter(F.col("term").isin(missing))
-            .select("term", "block_id", "doc_count", "max_score")
-            .withColumn("rn", F.row_number().over(w))
+            _ranked_block_meta(self.blocks.filter(F.col("term").isin(missing)))
             .filter(F.col("rn") <= k)
             .collect()
         )
-        by_term: Dict[str, list] = {t: [] for t in missing}
-        for r in rows:
-            by_term[r["term"]].append(r)
+        self._memo_block_meta(rows, k, missing)
+
+    def _memo_block_meta(self, rows: list, k: float, terms: Iterable = ()) -> None:
+        """Memoize ranked block rows per term as (k, rows); ``terms``
+        without rows memoize empty."""
+        by_term: Dict[str, list] = {t: [] for t in terms}
+        # collect() order is not the window order — restore the phase-1
+        # ranking so the [:k] slice and the single-term covering-prefix
+        # loop see blocks best-first
+        for r in sorted(rows, key=lambda r: r["rn"]):
+            by_term.setdefault(r["term"], []).append(r)
         for t, rs in by_term.items():
-            # collect() order is not the window order — restore the
-            # phase-1 ranking so the [:k] slice and the single-term
-            # covering-prefix loop see blocks best-first
-            rs.sort(key=lambda r: r["rn"])
-            cache[t] = (k, rs)
+            self._blockmeta_cache[t] = (k, rs)
 
     def _cached_block_meta(self, term: str, k: int):
         """Memoized per-term top-k block rows, or None (cache miss /
         cached with a smaller k)."""
-        got = getattr(self, "_blockmeta_cache", {}).get(term)
+        got = self._blockmeta_cache.get(term)
         if got is not None and got[0] >= k:
             return got[1][:k]
         return None
@@ -587,11 +632,14 @@ class SearchEngine:
         rare = order[0]
         if stats.get(rare, (0, 0))[0] == 0:
             return self._local([], _SCORE_SCHEMA)
-        ranges = (
-            self.blocks.filter(F.col("term") == rare)
-            .select("min_doc", "max_doc")
-            .collect()
-        )
+        # every block holds >= 1 doc, so df rows are all of rare's blocks
+        ranges = self._cached_block_meta(rare, stats[rare][0])
+        if ranges is None:
+            ranges = (
+                self.blocks.filter(F.col("term") == rare)
+                .select("min_doc", "max_doc")
+                .collect()
+            )
         rng_df = F.broadcast(
             self._local(
                 [(r["min_doc"], r["max_doc"]) for r in ranges],
@@ -876,10 +924,10 @@ class SearchEngine:
         #1): θ is computed from a phase 1 semi-joined with the allowed
         set, so it lower-bounds the k-th best filtered score and the
         phase-2 keep predicates stay sound."""
-        k = k or self.cfg.default_top_k
+        k = self._top_k(k)
         t0 = time.time()
         ast = qp.parse(query)
-        if ast is None:
+        if ast is None or k == 0:
             out = self._local([], _SCORE_SCHEMA)
         else:
             allowed = None
@@ -896,6 +944,14 @@ class SearchEngine:
         self.query_log.append({"query": query, "wall_ms": (time.time() - t0) * 1000})
         return out
 
+    def _top_k(self, k: Optional[int]) -> int:
+        """``k``, or the configured default when None; refuses k < 0."""
+        if k is None:
+            return self.cfg.default_top_k
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
+        return k
+
     def _enrich_hits(self, out: DataFrame) -> DataFrame:
         """Attach (url, title) to a ≤k-row hit frame.
 
@@ -908,7 +964,7 @@ class SearchEngine:
         free. Never broadcasts or shuffles the corpus-sized docmeta
         table (at 10^12 docs a docmeta broadcast is a driver/executor
         OOM); total cost is the scores job plus one In-pruned metadata
-        scan."""
+        scan — or, with the directory loaded, the scores job alone."""
         hit_rows = out.collect()
         enriched = T.StructType(
             list(out.schema.fields)
@@ -919,12 +975,15 @@ class SearchEngine:
         )
         if not hit_rows:
             return self._local([], enriched)
-        ids = [r["doc_id"] for r in hit_rows]
-        meta = self.docmeta.filter(F.col("doc_id").isin(ids)).select(
-            "doc_id", "url", "title"
-        )
-        self._last_enrich_scan = meta
-        lookup = {r["doc_id"]: (r["url"], r["title"]) for r in meta.collect()}
+        if self.directory_loaded:
+            lookup = self._hit_meta
+        else:
+            ids = [r["doc_id"] for r in hit_rows]
+            meta = self.docmeta.filter(F.col("doc_id").isin(ids)).select(
+                "doc_id", "url", "title"
+            )
+            self._last_enrich_scan = meta
+            lookup = {r["doc_id"]: (r["url"], r["title"]) for r in meta.collect()}
         data = [
             tuple(r) + lookup.get(r["doc_id"], (None, None)) for r in hit_rows
         ]
@@ -949,6 +1008,7 @@ class SearchEngine:
         jobs (one phase-1 score collect per query) plus two prefetches,
         instead of ~2B. ``meta_filter`` restricts every query's ranked
         universe (same semantics as ``search``)."""
+        k = self._top_k(k)
         all_terms: List[str] = []
         for q in queries:
             ast = qp.parse(q)
@@ -957,7 +1017,7 @@ class SearchEngine:
         if all_terms:
             uniq = list(dict.fromkeys(all_terms))
             self.term_stats(uniq)
-            self.prefetch_block_meta(uniq, k or self.cfg.default_top_k)
+            self.prefetch_block_meta(uniq, k)
         parts = [
             self.search(q, k, with_meta=False, meta_filter=meta_filter)
             .withColumn("query", F.lit(q))

@@ -1,7 +1,9 @@
-"""The engine's decoded blocks view: cached vs uncached rank identity,
-and no Python on a warm cached engine's query path.
+"""The engine's decoded blocks view and driver directory: cached vs
+uncached rank identity, the scan fallback above the directory bound, no
+Python on a warm cached engine's query path, and the Spark actions each
+query route issues.
 
-Both tests build an index with ``block_size`` 4 and ``wand_min_blocks``
+Every test builds an index with ``block_size`` 4 and ``wand_min_blocks``
 2, so every block-max pruned route fires on a 120-doc corpus. Once a
 cached engine registers its view, every engine over that index reads
 the cache (Spark matches cached plans across DataFrames), so the
@@ -15,6 +17,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.functions.tokenizer import tokenize_text
 from search_engine_spark.operators.index_build import build_index
+from search_engine_spark.operators import query_eval
 from search_engine_spark.operators.query_eval import SearchEngine
 from search_engine_spark.sources.pages_source import pages_df
 
@@ -86,24 +89,34 @@ def _spy_routes(eng: SearchEngine) -> Counter:
     return fired
 
 
-def test_cached_engine_rank_identical_to_uncached(spark, tmp_path):
-    """The cached view (the default, Python-free path) returns exactly
-    what the uncached view returns on every route — ids, order and
-    scores, with no tolerance."""
+def test_cached_engine_rank_identical_to_uncached(spark, tmp_path, monkeypatch):
+    """The cached view (the default, Python-free path) with its driver
+    directory, and a cached engine above the directory bound (per-query
+    lookup scans), both return exactly what the uncached view returns on
+    every route — ids, order and scores, with no tolerance."""
     out = _build(spark, tmp_path)
     plain = SearchEngine(spark, out, cache=False)
+    assert not plain.directory_loaded
     qs = _queries(plain)
     want = _run_all(plain, qs)
 
     eng = SearchEngine(spark, out)
+    assert eng.directory_loaded
     fired = _spy_routes(eng)
     got = _run_all(eng, qs)
+    monkeypatch.setattr(query_eval, "DIRECTORY_MAX_ROWS", 0)
+    scan = SearchEngine(spark, out)
+    assert not scan.directory_loaded
+    scan_fired = _spy_routes(scan)
+    got_scan = _run_all(scan, qs)
     eng.blocks.unpersist()
     eng.docmeta.unpersist()
 
     assert set(fired) == set(_ROUTES), fired
+    assert set(scan_fired) == set(_ROUTES), scan_fired
     assert all(want[k] for k in qs), want  # every query matches something
     assert got == want
+    assert got_scan == want
 
 
 _PYTHON_NODES = {"MapInPandas", "ArrowEvalPython", "BatchEvalPython",
@@ -158,3 +171,54 @@ def test_cached_engine_query_plans_run_no_python(spark, tmp_path, monkeypatch):
     assert len(storage()) == n_cached
     eng.blocks.unpersist()
     eng.docmeta.unpersist()
+
+
+def _spy_actions(monkeypatch, DataFrame) -> list:
+    """Record the columns of every frame ``collect``ed or ``count``ed."""
+    seen = []
+    for method in ("collect", "count"):
+        orig = getattr(DataFrame, method)
+
+        def wrapped(self, _orig=orig):
+            seen.append(tuple(self.columns))
+            return _orig(self)
+
+        monkeypatch.setattr(DataFrame, method, wrapped)
+    return seen
+
+
+def test_engine_actions_per_route(spark, tmp_path, monkeypatch):
+    """A warm engine with its directory loaded runs only scoring jobs:
+    each route's ``search`` collects a fixed number of (doc_id, score)
+    frames — phase-1 top-k where the route has one, then the hits —
+    and never reads the dictionary, block metadata or docmeta. Absent
+    terms answer (0, 0) without a dictionary scan."""
+    out = _build(spark, tmp_path)
+    eng = SearchEngine(spark, out)
+    assert eng.directory_loaded
+    qs = _queries(eng)
+    _run_all(eng, qs)  # warm: cache filled, every route run once
+    fired = _spy_routes(eng)
+    want = {"term_full": 1, "term_pruned": 2, "and": 1, "or": 2,
+            "tree_not": 2, "phrase": 1}
+    got = {}
+    for name in want:
+        seen = _spy_actions(monkeypatch, type(eng.blocks))
+        eng.search(qs[name], 10)
+        monkeypatch.undo()
+        assert all(cols == ("doc_id", "score") for cols in seen), (name, seen)
+        got[name] = len(seen)
+
+    seen = _spy_actions(monkeypatch, type(eng.blocks))
+    stats = eng.term_stats(["zzabsent", "zzmissing"])
+    hits = eng.search("zzabsent || zzmissing", 10).collect()
+    monkeypatch.undo()
+    eng.blocks.unpersist()
+    eng.docmeta.unpersist()
+
+    assert got == want
+    assert set(fired) == set(_ROUTES), fired
+    assert stats == {"zzabsent": (0, 0), "zzmissing": (0, 0)}
+    assert hits == []
+    # the hit collect and the caller's, no dictionary scan
+    assert seen == [("doc_id", "score"), ("doc_id", "score", "url", "title")], seen

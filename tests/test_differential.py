@@ -4,9 +4,11 @@ One small corpus with forced (tf, doc_len) ties — every text is indexed
 under three urls — is indexed twice: as a batch index whose tiny blocks
 (``block_size`` 4, ``wand_min_blocks`` 2) and lowered salt threshold
 send queries down every pruned route, and as a streamed
-``IncrementalIndexer`` index. Random ASTs over AND / OR / NOT / phrase /
-proximity, with duplicate terms, absent terms and the empty phrase, must
-rank exactly as the single-node oracle does on every surface.
+``IncrementalIndexer`` index. The batch index is opened twice: cached,
+with its driver directory, and uncached, so every lookup is a scan.
+Random ASTs over AND / OR / NOT / phrase / proximity, with duplicate
+terms, absent terms and the empty phrase, must rank exactly as the
+single-node oracle does on every surface.
 
 One known defect is tolerated, and only where it lives: the flat-OR
 pruned route (``_or_scores_block_pruned``) sums each doc's per-term
@@ -26,6 +28,7 @@ from hypothesis import strategies as st
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.operators.index_build import build_index
+from search_engine_spark.operators import query_eval
 from search_engine_spark.operators.query_eval import SearchEngine
 from search_engine_spark.oracle.refmodel import RefIndex
 from search_engine_spark.plans import query_parser as qp
@@ -64,12 +67,13 @@ def engines(spark, tmp_path_factory):
     pages = spark.createDataFrame(rows, PAGES_DDL)
     build_index(spark, pages, str(tmp / "batch"), CFG)
     batch = SearchEngine(spark, str(tmp / "batch"))
+    scan = SearchEngine(spark, str(tmp / "batch"), cache=False)
     landing = str(tmp / "landing")
     os.makedirs(landing)
     pages.coalesce(1).write.parquet(landing, mode="append")
     stream = IncrementalIndexer(spark, str(tmp / "stream"), CFG)
     stream.start(landing).awaitTermination(120)
-    return batch, stream, oracle
+    return batch, stream, oracle, scan
 
 
 _terms = st.sampled_from(VOCAB + (ABSENT,)).map(qp.Term)
@@ -132,22 +136,25 @@ def _assert_ranked(got, ranked, k, what, exact_ties=True):
 
 @given(ast=_asts, k=st.integers(min_value=1, max_value=12))
 # one pinned example per pruned route: single term, flat AND, flat OR,
-# mixed tree
+# mixed tree; and k=0, which every surface answers with no hits
 @example(ast=T("aa"), k=3)
+@example(ast=T("aa"), k=0)
 @example(ast=qp.And(T("aa"), T("bb")), k=5)
 @example(ast=qp.Or(qp.Or(T("aa"), T("bb")), T("cc")), k=4)
 @example(ast=qp.Or(qp.And(T("aa"), T("bb")), qp.And(T("cc"), qp.Not(T("dd")))), k=5)
 @settings(max_examples=16, deadline=None)
 def test_engines_match_oracle_on_random_queries(engines, ast, k):
-    batch, stream, oracle = engines
+    batch, stream, oracle, scan = engines
     q = _render(ast)
     ranked = oracle.search(q, oracle.n_docs)
     rows = lambda df: [(r["doc_id"], r["score"]) for r in df.collect()]
     or_terms = _flat_or_terms(qp.parse(q))
-    _assert_ranked(
-        rows(batch.search(q, k, with_meta=False)), ranked, k, ("search", q, k),
-        exact_ties=or_terms is None or len(set(or_terms)) < 3,
-    )
+    for eng in (batch, scan):
+        _assert_ranked(
+            rows(eng.search(q, k, with_meta=False)), ranked, k,
+            ("search", eng.directory_loaded, q, k),
+            exact_ties=or_terms is None or len(set(or_terms)) < 3,
+        )
     _assert_ranked(rows(stream.search_query(q, k)), ranked, k,
                    ("search_query", q, k))
     full = dict(ranked)
@@ -155,6 +162,27 @@ def test_engines_match_oracle_on_random_queries(engines, ast, k):
     assert got.keys() == full.keys(), ("scores_df", q)
     for d, s in got.items():
         assert abs(s - full[d]) <= 1e-9, ("scores_df", q, d, s, full[d])
+
+
+def test_directory_row_bound_covers_salted_blocks(engines):
+    """The cached batch engine holds its directory, the uncached one
+    does not, and the meta.json row bound covers what is held, with
+    "aa" salted over several blocks."""
+    batch, scan = engines[0], engines[3]
+    assert batch.directory_loaded and not scan.directory_loaded
+    n_blocks = sum(len(rows) for _, rows in batch._blockmeta_cache.values())
+    held = len(batch._stats_cache) + n_blocks + len(batch._hit_meta)
+    # block_id = salt * 2**20 + seq: "aa" spans salt 1 too
+    assert any(r["block_id"] >= 1 << 20 for r in batch._blockmeta_cache["aa"][1])
+    assert held <= query_eval._directory_rows(batch.store.read_meta(), CFG)
+
+
+def test_negative_k_raises(engines):
+    batch = engines[0]
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        batch.search("aa", -1)
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        batch.search_batch(["aa"], -1)
 
 
 def test_phrase_without_positions_raises(spark, tmp_path):
