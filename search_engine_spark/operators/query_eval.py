@@ -212,6 +212,16 @@ def eval_tree(
     raise TypeError(node)
 
 
+def top_k(k: Optional[int], cfg: EngineConfig) -> int:
+    """The k rule of both engines: ``k``, or the configured default when
+    None; refuses k < 0."""
+    if k is None:
+        return cfg.default_top_k
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    return k
+
+
 def _directory_rows(meta: dict, cfg: EngineConfig) -> float:
     """Upper bound, from meta.json alone, on the driver directory's rows:
     terms + docs + blocks, where a (term, salt) group of n postings has
@@ -924,7 +934,7 @@ class SearchEngine:
         #1): θ is computed from a phase 1 semi-joined with the allowed
         set, so it lower-bounds the k-th best filtered score and the
         phase-2 keep predicates stay sound."""
-        k = self._top_k(k)
+        k = top_k(k, self.cfg)
         t0 = time.time()
         ast = qp.parse(query)
         if ast is None or k == 0:
@@ -943,14 +953,6 @@ class SearchEngine:
             out = self._enrich_hits(out)
         self.query_log.append({"query": query, "wall_ms": (time.time() - t0) * 1000})
         return out
-
-    def _top_k(self, k: Optional[int]) -> int:
-        """``k``, or the configured default when None; refuses k < 0."""
-        if k is None:
-            return self.cfg.default_top_k
-        if k < 0:
-            raise ValueError(f"k must be >= 0, got {k}")
-        return k
 
     def _enrich_hits(self, out: DataFrame) -> DataFrame:
         """Attach (url, title) to a ≤k-row hit frame.
@@ -1008,7 +1010,7 @@ class SearchEngine:
         jobs (one phase-1 score collect per query) plus two prefetches,
         instead of ~2B. ``meta_filter`` restricts every query's ranked
         universe (same semantics as ``search``)."""
-        k = self._top_k(k)
+        k = top_k(k, self.cfg)
         all_terms: List[str] = []
         for q in queries:
             ast = qp.parse(q)

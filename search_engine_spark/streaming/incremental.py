@@ -18,8 +18,12 @@ module provides the real thing, Lucene-segment style:
   phrase / ``/N`` proximity leaves (token-ordinal ``exists`` checks
   over the long-form positions — the batch engine's exact semantics;
   the compressed-block layout itself remains the batch engine's job).
-  Corpus stats ride the state file; the term scan is term-bucket
-  partition-pruned at rest.
+  Queries read through a per-commit view (``_LiveView``): the live
+  segments' postings and docmeta frames, each read once, (n, avgdl)
+  from the state file, and a term → df memo; a committed change of the
+  state's segment list or ``next_doc_id`` drops it. New terms' df cost
+  one count job per query, memo hits none, and each term leaf is a
+  term-bucket partition-pruned scan scored with its df as a literal.
 * ``compact`` — fold all segments through the batch block builder into
   a normal ``IndexStore`` index (the segment → base-index merge).
   Independently, live segments auto-fold into one base segment past
@@ -37,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import cached_property
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,6 +120,7 @@ class IncrementalIndexer:
         self.seen_compact_after = int(seen_compact_after)
         self.segment_compact_after = int(segment_compact_after)
         self.postings_buckets = int(postings_buckets)
+        self._live: Optional[_LiveView] = None  # see _view
         os.makedirs(index_dir, exist_ok=True)
 
     # -- watermark bookkeeping -----------------------------------------
@@ -407,29 +413,49 @@ class IncrementalIndexer:
     def postings(self) -> DataFrame:
         return self._read_segments(self._read_state()["segments"], "postings")
 
+    def _view(self) -> "_LiveView":
+        """The committed live segments as queries read them; rebuilt
+        only when the state's segment list or ``next_doc_id`` moved (an
+        epoch or a fold committed), so the segments a fold deleted are
+        never read."""
+        st = self._read_state()  # also adopts persisted buckets
+        key = (tuple(st["segments"]), st["next_doc_id"])
+        if self._live is None or self._live.key != key:
+            self._live = _LiveView(self, st, key)
+        return self._live
+
+    def _lookup_dfs(self, view: "_LiveView", terms: list) -> None:
+        """Memoize the df of each of ``terms`` not in ``view.df`` yet,
+        all in ONE bucket-pruned count job; memo hits run no job."""
+        new = [t for t in terms if t not in view.df]
+        if not new:
+            return
+        rows = view.postings
+        if self.postings_buckets:
+            rows = rows.filter(F.col("term_bucket").isin(
+                sorted({_term_bucket_py(t, self.postings_buckets) for t in new})
+            ))
+        got = dict(
+            rows.filter(F.col("term").isin(new)).groupBy("term").count().collect()
+        )
+        view.df.update((t, got.get(t, 0)) for t in new)
+
     def search(self, term: str, k: int = 10) -> DataFrame:
-        """BM25 top-k over all segments — relational expression (the
-        same closed form as SearchEngine.more_like_this). The term
-        filter pairs with a driver-computed ``term_bucket ==`` filter
-        (VERDICT r3 #6) so the partitioned-at-rest segment postings
-        prune to one bucket directory per segment."""
-        n, avgdl = self._corpus_stats()  # also adopts persisted buckets
-        postings = self.postings()
-        scored = self._term_scores_seg(postings, term, n, avgdl)
+        """BM25 top-k of one term over the live segments: the
+        ``search_query`` term leaf, read through the same per-commit
+        view and df memo."""
+        from search_engine_spark.operators.query_eval import top_k
+
+        k = top_k(k, self.cfg)
+        if k == 0:
+            return self._no_hits()
+        view = self._view()
+        self._lookup_dfs(view, [term])
+        scored = self._term_scores_seg(view, term)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _corpus_stats(self) -> tuple:
-        """(n, avgdl) from the state file when present (no per-query
-        docmeta aggregation — ids are dense so n == next_doc_id), else
-        the legacy aggregation scan."""
-        st = self._read_state()
-        if st["next_doc_id"] and "total_doc_len" in st:
-            n = float(st["next_doc_id"])
-            return n, (float(st["total_doc_len"]) / n or 1.0)
-        agg = self.docmeta().agg(
-            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        return float(agg["n"]), float(agg["avgdl"] or 1.0)
+    def _no_hits(self) -> DataFrame:
+        return self.spark.createDataFrame([], "doc_id long, score double")
 
     def _term_hits(self, postings: DataFrame, term: str) -> DataFrame:
         """One term's segment postings rows: term-bucket pruned at rest,
@@ -441,20 +467,20 @@ class IncrementalIndexer:
             )
         return postings.filter(F.col("term") == term)
 
-    def _term_scores_seg(self, postings: DataFrame, term: str,
-                         n: float, avgdl: float) -> DataFrame:
+    def _term_scores_seg(self, view: "_LiveView", term: str) -> DataFrame:
         """One term's (doc_id, score) over the long-form segment
         postings: bucket-pruned at rest + closed-form BM25 column (the
-        batch engine's ``codec.bm25_stf_col``)."""
-        k1, b = self.cfg.k1, self.cfg.b
-        hits = self._term_hits(postings, term)
+        batch engine's ``codec.bm25_stf_col``) with the memoized df as
+        a literal — no per-leaf aggregate or join."""
+        n, avgdl = view.stats
+        hits = self._term_hits(view.postings, term)
         self._last_postings_scan = hits  # plan-shape tests
-        dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
-        return hits.join(F.broadcast(dfreq), "term").select(
+        return hits.select(
             "doc_id",
             (
-                bm25_idf_col(n, F.col("df"))
-                * bm25_stf_col(F.col("tf"), F.col("doc_len"), avgdl, k1, b)
+                bm25_idf_col(n, F.lit(view.df[term]))
+                * bm25_stf_col(F.col("tf"), F.col("doc_len"), avgdl,
+                               self.cfg.k1, self.cfg.b)
             ).alias("score"),
         )
 
@@ -463,30 +489,40 @@ class IncrementalIndexer:
         engine's :func:`~search_engine_spark.operators.query_eval.eval_tree`
         bound to the long-form postings: each term leaf and each phrase
         member's positions is a bucket+term-pruned scan; NOT anti-joins
-        the segment docmeta."""
-        from search_engine_spark.operators.query_eval import eval_tree
+        the segment docmeta.
+
+        Reads go through the per-commit view (``_view``): the segments
+        are read once per commit, and the query's terms missing from
+        its df memo cost one count job, so a query whose terms are all
+        memoized runs only its scoring jobs. ``k`` follows the batch
+        engine's rule (``query_eval.top_k``): k < 0 raises, k == 0
+        returns no hits without reading anything."""
+        from search_engine_spark.operators.query_eval import eval_tree, top_k
         from search_engine_spark.plans import query_parser as qp
 
+        k = top_k(k, self.cfg)
         ast = qp.parse(query)
-        if ast is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        n, avgdl = self._corpus_stats()
-        postings = self.postings()
+        if ast is None or k == 0:
+            return self._no_hits()
+        view = self._view()
+        self._lookup_dfs(view, qp.extract_terms(ast))
 
         def positions(term: str) -> DataFrame:
-            if "positions" not in postings.columns:
+            if "positions" not in view.postings.columns:
                 raise RuntimeError(
                     "phrase/proximity queries need token ordinals — rebuild "
                     "the stream with store_positions=True (or compact() and "
                     "use SearchEngine)"
                 )
-            return self._term_hits(postings, term).select("doc_id", "positions")
+            return self._term_hits(view.postings, term).select(
+                "doc_id", "positions"
+            )
 
         scores = eval_tree(
             ast,
-            lambda t: self._term_scores_seg(postings, t, n, avgdl),
+            lambda t: self._term_scores_seg(view, t),
             positions,
-            lambda: self.docmeta().select("doc_id"),
+            lambda: view.docmeta.select("doc_id"),
         )
         return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -533,6 +569,39 @@ class IncrementalIndexer:
             }
         )
         return store
+
+
+class _LiveView:
+    """What queries read of one commit of the live segments: the
+    ``postings`` and (on first use) ``docmeta`` frames, each read once
+    (a read costs one Parquet footer job per segment); the corpus
+    ``stats`` (n, avgdl); and ``df``, the term → df memo. ``key`` is
+    the commit: the state's segment list and ``next_doc_id``."""
+
+    def __init__(self, ixer: IncrementalIndexer, st: dict, key: tuple):
+        self.key = key
+        self._st = st
+        self._read = lambda stage: ixer._read_segments(st["segments"], stage)
+        self.postings = self._read("postings")
+        self.df: dict = {}
+
+    @cached_property
+    def docmeta(self) -> DataFrame:
+        return self._read("docmeta")
+
+    @cached_property
+    def stats(self) -> tuple:
+        """(n, avgdl) from the state file when present — ids are dense
+        so n == next_doc_id — else one aggregation scan of docmeta
+        (legacy state without ``total_doc_len``)."""
+        st = self._st
+        if st["next_doc_id"] and "total_doc_len" in st:
+            n = float(st["next_doc_id"])
+            return n, (float(st["total_doc_len"]) / n or 1.0)
+        agg = self.docmeta.agg(
+            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
+        ).collect()[0]
+        return float(agg["n"]), float(agg["avgdl"] or 1.0)
 
 
 def streaming_term_counts(

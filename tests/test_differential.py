@@ -178,11 +178,11 @@ def test_directory_row_bound_covers_salted_blocks(engines):
 
 
 def test_negative_k_raises(engines):
-    batch = engines[0]
-    with pytest.raises(ValueError, match="k must be >= 0"):
-        batch.search("aa", -1)
-    with pytest.raises(ValueError, match="k must be >= 0"):
-        batch.search_batch(["aa"], -1)
+    batch, stream = engines[:2]
+    for run in (batch.search, lambda q, k: batch.search_batch([q], k),
+                stream.search, stream.search_query):
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            run("aa", -1)
 
 
 def test_phrase_without_positions_raises(spark, tmp_path):

@@ -336,15 +336,19 @@ def test_legacy_total_doc_len_backfilled_on_resume(spark, tmp_path):
     st.pop("total_doc_len")  # simulate the pre-round-4 state shape
     with open(sp, "w") as f:
         _json.dump(st, f)
-
+    # a legacy state's (n, avgdl) come from one docmeta scan per commit
     ixer2 = IncrementalIndexer(spark, idx, CFG)
+    legacy = ixer2.docmeta().agg(F.sum("doc_len")).collect()[0][0]
+    n, avgdl = ixer2._view().stats
+    assert n == 6 and abs(avgdl - legacy / 6.0) < 1e-9
+
     _write_batch(spark, landing, _rows(range(6, 9), text))
     ixer2.start(landing).awaitTermination(120)
     st = ixer2._read_state()
     truth = ixer2.docmeta().agg(F.sum("doc_len")).collect()[0][0]
     assert st["total_doc_len"] == truth, (st["total_doc_len"], truth)
     # and the post-resume scores use the true avgdl
-    n, avgdl = ixer2._corpus_stats()
+    n, avgdl = ixer2._view().stats
     assert n == 9 and abs(avgdl - truth / 9.0) < 1e-9
 
 
@@ -475,3 +479,76 @@ def test_streaming_boolean_search_matches_batch(spark, tmp_path):
     assert ixer.search_query('"общий корпус"', 5).count() > 0
     # whitespace-only phrase parses to Phrase(()) — zero hits, no crash
     assert ixer.search_query('"   "', 5).count() == 0
+
+
+def test_stream_view_refreshes_across_commits(spark, tmp_path):
+    """Queries read the live segments through a view kept per commit:
+    after a second batch lands, the next query on the same indexer sees
+    the new docs and the new df and ranks as a RefIndex over both
+    batches — also when each epoch folds (``segment_compact_after=0``)
+    and garbage-collects the segment dirs the first view read."""
+    from search_engine_spark.oracle.refmodel import RefIndex
+
+    text = lambda i: (
+        f"альфа doc{i} " + "бета " * (i % 3) + ("гамма" if i >= 4 else "")
+    )
+    for fold_after in (32, 0):
+        landing = str(tmp_path / f"landing{fold_after}")
+        os.makedirs(landing)
+        ixer = IncrementalIndexer(spark, str(tmp_path / f"idx{fold_after}"),
+                                  CFG, segment_compact_after=fold_after)
+        rows = []
+        for ids in (range(0, 6), range(6, 14)):
+            rows += _rows(ids, text)
+            _write_batch(spark, landing, _rows(ids, text))
+            ixer.start(landing).awaitTermination(120)
+            oracle = RefIndex.from_rows(
+                [{"url": u, "title": "", "text": t} for u, _, _, t, _ in rows],
+                CFG,
+            )
+            for q in ("бета || гамма", "альфа && !бета"):
+                got = [(r["doc_id"], r["score"])
+                       for r in ixer.search_query(q, 20).collect()]
+                want = oracle.search(q, 20)
+                assert [d for d, _ in got] == [d for d, _ in want], q
+                assert all(abs(g - w) <= 1e-9
+                           for (_, g), (_, w) in zip(got, want)), q
+            view = ixer._view()
+            assert view.stats[0] == len(rows)
+            assert {t: view.df[t] for t in ("альфа", "бета", "гамма")} == {
+                t: oracle.df(t) for t in ("альфа", "бета", "гамма")
+            }
+        assert ixer.search("гамма", 20).count() == oracle.df("гамма")
+
+
+def test_stream_query_actions(spark, tmp_path, monkeypatch):
+    """The engine-issued actions of a warm stream query: a query whose
+    terms are all in the df memo issues no ``collect``/``count``, one
+    with several new terms exactly one (the df lookup), and a term
+    leaf plans no broadcast join and no aggregate over ``term``."""
+    from test_decoded_view import _spy_actions
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    text = lambda i: f"эта тета doc{i} " + "йота " * (i % 3) + "каппа"
+    _write_batch(spark, landing, _rows(range(0, 8), text))
+    ixer = IncrementalIndexer(spark, str(tmp_path / "idx"), CFG)
+    ixer.start(landing).awaitTermination(120)
+    ixer.search_query("эта && тета", 5).collect()  # warm: view + 2 dfs
+    DataFrame = type(ixer._view().postings)
+
+    seen = _spy_actions(monkeypatch, DataFrame)
+    ixer.search_query("тета || !эта", 5)
+    monkeypatch.undo()
+    assert seen == []
+    seen = _spy_actions(monkeypatch, DataFrame)
+    ixer.search_query('йота || "каппа doc1" || эта', 5)
+    monkeypatch.undo()
+    assert seen == [("term", "count")]
+    assert ixer._view().df["doc1"] == 1
+
+    plan = (
+        ixer.search_query("йота", 5)._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    assert "BroadcastExchange" not in plan and "Aggregate" not in plan, plan
