@@ -1,7 +1,7 @@
 """Benchmark harness — one JSON line to stdout.
 
-Runs the engine's headline workload at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32):
+Runs the engine's headline workload at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data) on local[$SPARK_GRAFT_CPUS] (default: every core):
 
 * index_build  — full pipeline over `documents` as the pages corpus
                  (extract → tokenize → postings → dictionary →
@@ -13,9 +13,8 @@ Runs the engine's headline workload at $SPARK_GRAFT_SF_DIR (default
 Output: {"metric": "index_docs_per_sec", "value": N, "unit": "sec",
 "queries": {name: seconds}, "sf": dir, ...}.
 
-Scaling-efficiency evidence (north_rule N→4N): run twice —
-SPARK_GRAFT_CPUS=8 then 32 — via scripts/scaling_bench.py, which
-records both throughputs and their efficiency into BENCH/BASELINE.md.
+Scaling-efficiency evidence (north_rule N→4N) comes from
+scripts/cluster_scaling_bench.py, not from this script.
 """
 
 from __future__ import annotations
@@ -23,65 +22,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 import tempfile
 import time
 
 
-def _box_state() -> dict:
-    """Light stream-bandwidth sample via the shared probe
-    (scripts/membw_probe.quick_stream_state)."""
-    try:
-        sys.path.insert(0, os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "scripts"))
-        import membw_probe
-
-        return membw_probe.quick_stream_state()
-    except Exception:  # pragma: no cover - probe must never fail bench
-        return {}
-
-
-def _wait_for_healthy_window() -> dict:
-    """Retry-until-healthy (VERDICT r3 #7): this box's memory bandwidth
-    is bimodal (~20.5 GB/s healthy vs ~2-7 degraded for stretches), and
-    a bench run in a degraded window understates the code by multiples.
-    Probe the 4-core stream bandwidth; below the threshold, sleep and
-    re-probe until the wait budget runs out, then run anyway with the
-    outcome recorded so the number is auditable.
-
-    Env knobs: SPARK_GRAFT_HEALTHY_BW (GB/s threshold, 0 disables;
-    default 12), SPARK_GRAFT_HEALTHY_WAIT_S (budget; default 600 —
-    the box recovers from work-induced degradation in 2-4 idle min),
-    SPARK_GRAFT_HEALTHY_PROBE_S (re-probe interval; default 45)."""
-    thr = float(os.environ.get("SPARK_GRAFT_HEALTHY_BW", "12"))
-    budget = float(os.environ.get("SPARK_GRAFT_HEALTHY_WAIT_S", "600"))
-    interval = float(os.environ.get("SPARK_GRAFT_HEALTHY_PROBE_S", "45"))
-    if thr <= 0:
-        return {"healthy_wait": "disabled"}
-    t0 = time.time()
-    while True:
-        bw = _box_state().get("stream_bw_4core_total_gb_s")
-        waited = round(time.time() - t0, 1)
-        if bw is None:
-            # probe unavailable ≠ degraded window (ADVICE r4): without a
-            # reading there is nothing to wait FOR — run now, flagged
-            return {"healthy_wait": "unprobed", "healthy_wait_s": waited}
-        if bw >= thr:
-            return {"healthy_wait": "healthy", "healthy_wait_s": waited,
-                    "healthy_wait_bw": bw}
-        if time.time() - t0 + interval > budget:
-            # all probed windows degraded — run anyway, say so
-            return {"healthy_wait": "timeout", "healthy_wait_s": waited,
-                    "healthy_wait_bw": bw}
-        print(f"[bench] stream bw {bw} GB/s < {thr}; waiting for a "
-              f"healthy window ({waited}/{budget}s)", file=sys.stderr)
-        time.sleep(interval)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    healthy = _wait_for_healthy_window()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     from pyspark.sql import functions as F
 
     from search_engine_spark.config import EngineConfig
@@ -132,16 +79,11 @@ def main() -> None:
         eng.docmeta.count()
         eng.blocks.count()
 
-        # best-of-K (default 2): the microVM block layer / THP
-        # compaction inject one-sided multi-second stalls (CLAUDE.md);
-        # the min of K runs is the documented noise discipline for
-        # this box. SPARK_GRAFT_BENCH_TRIALS raises K for dedicated
-        # variance checks (e.g. the q_or best-of-5 watch, VERDICT r3 #8)
-        trials = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "2"))
-
+        # best-of-2: wall noise on a shared box is one-sided (stalls
+        # only add time), so the min of two runs is the closer estimate
         def bench(name: str, fn) -> None:
             best = None
-            for _ in range(trials):
+            for _ in range(2):
                 t = time.time()
                 fn()
                 dt = time.time() - t
@@ -213,17 +155,6 @@ def main() -> None:
         print(
             json.dumps(
                 {
-                    # one fast stream sample (see scripts/membw_probe):
-                    # this box's memory bandwidth is bimodal (~20.5
-                    # GB/s healthy vs ~7 degraded for stretches) and
-                    # every timing above is hostage to which state it
-                    # ran in — record it so the numbers are auditable
-                    "box_state": _box_state(),
-                    # the healthy-window gate outcome this run started
-                    # under (VERDICT r3 #7): "healthy" = probe met the
-                    # threshold, "timeout" = every probed window was
-                    # degraded and the run proceeded anyway
-                    **healthy,
                     "metric": "index_docs_per_sec",
                     "value": round(docs_per_sec, 3),
                     "unit": "sec",

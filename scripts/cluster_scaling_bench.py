@@ -1,13 +1,12 @@
 """TRUE two-cluster-size scaling evidence: a local Spark STANDALONE
 cluster with N vs 4N single-core worker JVMs.
 
-The north rule's criterion is throughput at two CLUSTER sizes. The
-`local[N]` thread proxy (scripts/scaling_bench.py) distorts both ends:
-unpinned, a "1-core" JVM's GC/shuffle/Arrow threads run free on the
-other 31 cores (measured 1.2 cores busy); pinned, all 4 task threads
-share ONE heap, so GC pressure inflates CPU ~25% at local[4]. Real
-clusters have neither artifact — each executor is its own JVM with its
-own heap and cores.
+The north rule's criterion is throughput at two CLUSTER sizes. A
+`local[N]` thread proxy distorts both ends: unpinned, a "1-core" JVM's
+GC/shuffle/Arrow threads run free on the other cores (measured 1.2
+cores busy); pinned, all 4 task threads share ONE heap, so GC pressure
+inflates CPU ~25% at local[4]. Real clusters have neither artifact —
+each executor is its own JVM with its own heap and cores.
 
 This harness builds that faithfully on one box:
 
@@ -112,25 +111,53 @@ class Cluster:
                 p.kill()
 
 
-def box_state_probe() -> dict:
-    """One fast stream-probe sample (scripts/membw_probe.py) recorded
-    with every scaling trial: this microVM's aggregate memory
-    bandwidth is bimodal (measured 20.5 GB/s healthy vs ~7 GB/s in a
-    degraded stretch), and a 4-worker build in a degraded window is
-    bandwidth-starved in a way a 1-worker build is not — silently
-    corrupting the N->4N ratio. Recording the probe makes each
-    sample's box state auditable."""
-    import importlib
+def generate_corpus(spark, n_docs: int, out: str, chunk: int = 4000) -> int:
+    """Deterministic corpus: seeded generator chunks, parallelized as a
+    Spark job (one chunk per task)."""
+    from pyspark.sql import types as T
 
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    probe = importlib.import_module("membw_probe")
-    one = probe.best_of("stream", [0], 1)[0]
-    four = probe.best_of("stream", [0, 1, 2, 3], 1)
-    gb = 25 * 2 * 400_000_000 / 1e9
-    return {
-        "stream_bw_1core_gb_s": round(gb / one, 2),
-        "stream_bw_4core_total_gb_s": round(sum(gb / t for t in four), 2),
-    }
+    from search_engine_spark.sources.pages_source import generate_pages_pdf
+
+    n_chunks = (n_docs + chunk - 1) // chunk
+    seeds = [(i, chunk) for i in range(n_chunks)]
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(), False),
+            T.StructField("warc_ts", T.TimestampType(), True),
+            T.StructField("html", T.BinaryType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("lang", T.StringType(), True),
+        ]
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            for _, row in pdf.iterrows():
+                # null_text_frac=1.0: every row carries html only, so the
+                # build pays the full extraction path per doc — the
+                # Common-Crawl regime the north rule describes.
+                # norm_dup_frac=0: the bench corpus keeps exactly n
+                # unique urls (comparable across rounds); normalization
+                # dedup is exercised by the pytest corpus instead
+                out_pdf = generate_pages_pdf(
+                    n_docs=int(row["chunk"]), seed=1000 + int(row["seed"]),
+                    null_text_frac=1.0, norm_dup_frac=0.0,
+                )
+                # chunk-unique urls so chunks don't collide
+                out_pdf["url"] = out_pdf["url"].str.replace(
+                    "https://", f"https://c{int(row['seed']):04d}.", n=1,
+                    regex=False,
+                )
+                assert out_pdf["url"].str.contains(
+                    f"c{int(row['seed']):04d}."
+                ).all(), "chunk url prefixing failed"
+                yield out_pdf[["url", "warc_ts", "html", "text", "lang"]]
+
+    df = spark.createDataFrame(seeds, "seed int, chunk int").repartition(
+        n_chunks
+    ).mapInPandas(gen, schema=schema)
+    df.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out).count()
 
 
 def run_build(n_workers: int, corpus: str, zip_path: str, base_dir: str,
@@ -184,10 +211,7 @@ def main() -> int:
     corpus = args.corpus or os.path.join(base,
                                          f"se_scaling_corpus_{args.docs}")
     if not os.path.isdir(corpus):
-        from scaling_bench import generate_corpus
-
-        spark = build_session(cpus=16, shuffle_partitions=16,
-                              app_name="corpus_gen")
+        spark = build_session(app_name="corpus_gen")
         n = generate_corpus(spark, args.docs, corpus)
         print(f"corpus: {n} docs at {corpus}")
         spark.stop()
@@ -202,7 +226,6 @@ def main() -> int:
                 r = run_build(args.only, corpus, zip_path, run_dir)
             finally:
                 cl.stop()
-            r["box_state"] = box_state_probe()
             samples.append(r)
             print(f"trial {trial} {args.only} worker(s): {r}", flush=True)
         with open(args.out, "w") as f:
@@ -220,7 +243,6 @@ def main() -> int:
                 r = run_build(k, corpus, zip_path, run_dir)
             finally:
                 cl.stop()
-            r["box_state"] = box_state_probe()
             samples[k].append(r)
             print(f"trial {trial} {k} worker(s): {r}", flush=True)
     results = {}

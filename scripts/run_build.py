@@ -1,18 +1,19 @@
 """spark-submit entry point: build the full index over a pages table.
 
     spark-submit --py-files search_engine_spark.zip scripts/run_build.py \
-        --input /path/pages_parquet --output /path/index --cpus 32
+        --input /path/pages_parquet --output /path/index --cpus 4
 
 Prints one JSON line: {"n_docs": ..., "build_s": ..., "docs_per_sec": ...}.
-Used by scripts/scaling_bench.py for the N→4N scaling-efficiency
-measurement (north_rule); `--cpus` selects local[N] when no master is
-given by spark-submit.
+Used by scripts/cluster_scaling_bench.py for the N→4N
+scaling-efficiency measurement (north_rule); `--cpus` selects local[N]
+when no master is given by spark-submit.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -21,7 +22,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--pyz", default=None,
                     help="package zip; addPyFile'd for the driver too "
@@ -68,8 +69,6 @@ def main() -> None:
         hz = os.sysconf("SC_CLK_TCK")
         u, n, s_ = int(v[0]), int(v[1]), int(v[2])
         return (u + n + s_) / hz
-
-    import os
 
     cfg = EngineConfig(index_partitions=parts)
     c0 = _sys_cpu_s()

@@ -749,11 +749,14 @@ def build_index(
     resume: bool = False,
 ) -> IndexStore:
     """End-to-end build. ``resume=True`` skips stages whose manifest
-    entry is complete (kill the job after any stage; rerun resumes)."""
+    entry is complete (kill the job after any stage; rerun resumes); it
+    raises ``ValueError`` if those stages were built under another
+    ``cfg``."""
     from search_engine_spark.session import ensure_shipped
 
     ensure_shipped(spark)
     store = IndexStore(index_dir)
+    store.bind_config(cfg.to_dict(), resume)
     timings = {}
 
     if not (resume and store.stage_complete("docs")):

@@ -34,6 +34,13 @@ class QueryError(ValueError):
     pass
 
 
+# Deepest query accepted: paren/NOT nesting plus AND/OR chain length.
+# The parser, the optimizer and every evaluator recurse over the AST, and
+# Python's default recursion limit breaks near 250 paren levels or ~990
+# chained operators; real queries stay under 10.
+MAX_QUERY_DEPTH = 64
+
+
 @dataclass(frozen=True)
 class Term:
     term: str
@@ -173,6 +180,10 @@ def _lex(query: str) -> List[Tuple[int, str]]:
 
 
 class _Parser:
+    """Each rule takes ``nest``, its paren/NOT nesting, and returns
+    ``(node, depth)``, the node's AST height; ``nest + depth`` is bounded
+    by ``MAX_QUERY_DEPTH``."""
+
     def __init__(self, toks: List[Tuple[int, str]]):
         self.toks = toks
         self.pos = 0
@@ -185,15 +196,24 @@ class _Parser:
         self.pos += 1
         return t
 
-    def expression(self) -> Node:
-        left = self.term()
+    @staticmethod
+    def bound(nest: int, depth: int) -> int:
+        if nest + depth > MAX_QUERY_DEPTH:
+            raise QueryError(
+                f"Query nests deeper than {MAX_QUERY_DEPTH} levels"
+            )
+        return depth
+
+    def expression(self, nest: int) -> Tuple[Node, int]:
+        left, d = self.term(nest)
         while self.peek() == _OR:
             self.advance()
-            left = Or(left, self.term())
-        return left
+            right, rd = self.term(nest)
+            left, d = Or(left, right), self.bound(nest, 1 + max(d, rd))
+        return left, d
 
-    def term(self) -> Node:
-        left = self.factor()
+    def term(self, nest: int) -> Tuple[Node, int]:
+        left, d = self.factor(nest)
         while True:
             k = self.peek()
             if k == _AND:
@@ -201,19 +221,22 @@ class _Parser:
             elif k in (_RP, _OR, _END):
                 break
             # implicit AND: fall through without consuming
-            left = And(left, self.factor())
-        return left
+            right, rd = self.factor(nest)
+            left, d = And(left, right), self.bound(nest, 1 + max(d, rd))
+        return left, d
 
-    def factor(self) -> Node:
+    def factor(self, nest: int) -> Tuple[Node, int]:
+        self.bound(nest, 1)  # before recursing: a leaf is 1 deep
         if self.peek() == _NOT:
             self.advance()
-            return Not(self.factor())
-        return self.primary()
+            child, d = self.factor(nest + 1)
+            return Not(child), d + 1
+        return self.primary(nest)
 
-    def primary(self) -> Node:
+    def primary(self, nest: int) -> Tuple[Node, int]:
         k, v = self.advance()
         if k == _LP:
-            e = self.expression()
+            e = self.expression(nest + 1)
             if self.peek() != _RP:
                 raise QueryError("Expected ')'")
             self.advance()
@@ -228,10 +251,10 @@ class _Parser:
             terms = tuple(t for t in pv.split(" ") if t)
             if self.peek() == _PROX:
                 _, dist = self.advance()
-                return Phrase(terms, int(dist))
-            return Phrase(terms)
+                return Phrase(terms, int(dist)), 1
+            return Phrase(terms), 1
         if k == _TERM:
-            return Term(v)
+            return Term(v), 1
         raise QueryError("Expected term, phrase, or '('")
 
 
@@ -253,7 +276,7 @@ def parse(query: str) -> Optional[Node]:
     if len(toks) == 1:  # only END → empty query
         return None
     p = _Parser(toks)
-    root = p.expression()
+    root, _ = p.expression(0)
     if p.peek() != _END:
         raise QueryError("Unexpected token")
     return optimize(root)

@@ -68,11 +68,19 @@ def ensure_shipped(spark: SparkSession) -> None:
 
 def build_session(
     cpus: int | str = "*",
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
     app_name: str = "search_engine_spark",
-    driver_memory: str = "32g",
+    driver_memory: str | None = None,
     local_dir: str | None = None,
 ) -> SparkSession:
+    """A local session fitted to this machine: ``shuffle_partitions``
+    defaults to the core count (``cpus``, or every core for ``"*"``)
+    and ``driver_memory`` to a quarter of RAM, capped at 8 GB."""
+    if shuffle_partitions is None:
+        shuffle_partitions = os.cpu_count() if cpus == "*" else int(cpus)
+    if driver_memory is None:
+        ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+        driver_memory = f"{max(1, min(8, int(ram_gb // 4)))}g"
     builder = SparkSession.builder.master(f"local[{cpus}]")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -11,7 +11,8 @@ Layout (parquet fallback)::
 
     index_dir/
       meta.json        engine config + N + avgdl + IndexStats + timings
-      manifest.json    per-stage lineage: rows, wall_ms, per-file rows
+      manifest.json    build config + per-stage lineage: rows, wall_ms,
+                       per-file rows
       docmeta/         (doc_id, url, title, lang, doc_len, unique_terms)
       postings/        (term, doc_id, tf, doc_len[, positions])  sorted runs
       dictionary/      (term, df, cf)
@@ -24,7 +25,8 @@ Layout (parquet fallback)::
 
 ``manifest.json`` is the checkpoint/resume protocol (modeled on the
 reference crawler's JSON state, ``url_manager.py:197-251``): a stage is
-recomputed iff its manifest entry is missing or incomplete; per-file row
+recomputed iff its manifest entry is missing or incomplete, and a resume
+under a config other than the recorded one is refused; per-file row
 counts are read from parquet footers (cheap lineage, no extra job).
 """
 
@@ -77,6 +79,24 @@ class IndexStore:
         with open(tmp, "w") as f:
             json.dump(meta, f, indent=1, ensure_ascii=False)
         os.replace(tmp, self._meta_path)
+
+    def bind_config(self, config: dict, resume: bool) -> None:
+        """Record the build config in the manifest before any stage runs.
+
+        A fresh build starts a new manifest. A resume keeps the completed
+        stages only if they were written under this same config: reusing
+        them under another one (say, blocks whose ``max_score`` bounds
+        came from another k1/b) would prune with wrong bounds and return
+        a quietly wrong top-k, so a mismatch, or an unrecorded config,
+        raises instead."""
+        m = self.read_manifest() if resume else {"stages": {}}
+        if m["stages"] and m.get("config") != config:
+            raise ValueError(
+                f"cannot resume {self.dir}: its completed stages were built "
+                "under another EngineConfig; rebuild with resume=False"
+            )
+        m["config"] = config
+        self._write_manifest(m)
 
     # -- stages --------------------------------------------------------
     def stage_path(self, stage: str) -> str:

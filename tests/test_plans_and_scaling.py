@@ -217,7 +217,7 @@ def test_suggest_prefix_pushed_and_dictionary_range_sorted(spark, tmp_path):
 
 
 def test_scaling_corpus_urls_unique(spark):
-    from scaling_bench import generate_corpus
+    from cluster_scaling_bench import generate_corpus
     import tempfile
 
     out = os.path.join(tempfile.mkdtemp(prefix="se_test_corpus_"), "pages")

@@ -3,8 +3,8 @@
 import pytest
 
 from search_engine_spark.plans.query_parser import (
-    And, Not, Or, Phrase, QueryError, Term, complexity, extract_terms,
-    parse, validate,
+    MAX_QUERY_DEPTH, And, Not, Or, Phrase, QueryError, Term, complexity,
+    extract_terms, parse, validate,
 )
 
 
@@ -61,6 +61,30 @@ def test_empty_and_errors():
     with pytest.raises(QueryError):
         parse("a &&")
     assert validate("a && b") and not validate('"x')
+
+
+@pytest.mark.parametrize("query", [
+    "(" * 248 + "a" + ")" * 248,                    # nested parens
+    " || ".join(f"t{i}" for i in range(996)),       # flat OR chain
+    "!" * 991 + "a",                                # NOT chain
+], ids=["parens", "or_chain", "not_chain"])
+def test_deep_query_raises_query_error(query):
+    """Past the recursion limit these raised RecursionError, and
+    validate() raised instead of returning False."""
+    with pytest.raises(QueryError, match=str(MAX_QUERY_DEPTH)):
+        parse(query)
+    assert validate(query) is False
+
+
+def test_depth_bound_edges():
+    n = MAX_QUERY_DEPTH
+    for ok, bad in [
+        ("(" * (n - 1) + "a" + ")" * (n - 1), "(" * n + "a" + ")" * n),
+        (" ".join(f"t{i}" for i in range(n)),
+         " ".join(f"t{i}" for i in range(n + 1))),
+        ("!" * (n - 1) + "a", "!" * n + "a"),
+    ]:
+        assert validate(ok) and not validate(bad)
 
 
 def test_extract_terms_and_complexity():

@@ -61,6 +61,23 @@ def test_resume_skips_completed_stages_and_is_identical(spark, tmp_path):
     assert m["stages"]["docs"]["wall_ms"] == manifest["stages"]["docs"]["wall_ms"]
 
 
+def test_resume_refuses_changed_config(spark, tmp_path):
+    """Stages built under one config must not be reused under another:
+    the kept blocks would carry the old k1's max_score bounds, and
+    block-max pruning would return a quietly wrong top-k."""
+    cfg = EngineConfig(index_partitions=4)
+    pages = pages_df(spark, n_docs=60, seed=7)
+    out = str(tmp_path / "idx")
+    build_index(spark, pages, out, cfg)
+    # a crash before the blocks stage: the rerun would reuse the rest
+    IndexStore(out).invalidate("blocks")
+    with pytest.raises(ValueError, match="another EngineConfig"):
+        build_index(spark, pages, out, EngineConfig(index_partitions=4, k1=2.0),
+                    resume=True)
+    # the refused resume left the recorded config as it was
+    assert IndexStore(out).read_manifest()["config"] == cfg.to_dict()
+
+
 def test_salted_build_semantically_equal_to_unsalted(spark, tmp_path):
     """FIXTURES §6: one term in ~50% of docs; salting must not change
     the decoded index."""
