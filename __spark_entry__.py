@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.config import EngineConfig
-from search_engine_spark.operators.dedup import DEFAULT_MAX_SHINGLE_DF
 
 # ---------------------------------------------------------------------------
 # corpus + memoized index
@@ -236,18 +235,26 @@ shn AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)
 """
 )
 
-_JACCARD_PAIRS = _SHINGLES + """,
+# Every exact shingle-Jaccard pair at t = 0.8 (a `pairs` CTE after
+# _SHINGLES): the ground truth of every near-dup operator, since each
+# engine verifies its candidates exactly and they differ only in how
+# they generate candidates.
+_PAIRS = """,
 inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       round(i * 1.0 / (na.n_sh + nb.n_sh - i), 6) AS jaccard
-FROM inter
-JOIN shn na ON na.doc_id = id_a
-JOIN shn nb ON nb.doc_id = id_b
-WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
+),
+pairs AS (
+  SELECT id_a, id_b, i * 1.0 / (na.n_sh + nb.n_sh - i) AS jaccard
+  FROM inter
+  JOIN shn na ON na.doc_id = id_a
+  JOIN shn nb ON nb.doc_id = id_b
+  WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
+)"""
+
+_JACCARD_PAIRS = _SHINGLES + _PAIRS + """
+SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM pairs
 """
 
 def _simhash_word_sql(col: str) -> str:
@@ -303,29 +310,6 @@ WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
 """
 
 
-# df-capped candidate generation mirroring ngram_jaccard_pairs'
-# max_shingle_df default (ADVICE r2: the engine drops shingles above
-# the cap when generating candidates — only there; Jaccard is still
-# exact over the full shingle universe — so the oracle must share that
-# candidate-generation rule or a boilerplate-heavy corpus diverges).
-# Used for the ngram-exact operators only; the MinHash/SimHash engines
-# sketch ALL shingles, so their ground truth stays the uncapped query.
-_CAND_CAPPED = f""",
-rare AS (SELECT shingle FROM sh GROUP BY shingle
-         HAVING count(*) <= {DEFAULT_MAX_SHINGLE_DF}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a JOIN rare USING (shingle)
-  JOIN sh b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS i
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)"""
-
 # quality_features formula, mirrored ONCE (textstats.py) — shared by
 # the quality gate and canonical_pick so the weights/targets live in
 # exactly one SQL copy. Requires a `toks` CTE (_TOKS) in scope.
@@ -360,16 +344,6 @@ q AS (
   FROM qbase
 )
 """
-
-_JACCARD_PAIRS_CAPPED = _SHINGLES + _CAND_CAPPED + """
-SELECT id_a, id_b,
-       round(i * 1.0 / (na.n_sh + nb.n_sh - i), 6) AS jaccard
-FROM inter
-JOIN shn na ON na.doc_id = id_a
-JOIN shn nb ON nb.doc_id = id_b
-WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
-"""
-
 
 # ---------------------------------------------------------------------------
 # query implementations
@@ -968,8 +942,8 @@ def _q_mix_sources(spark, sf_dir):
 def _q_canonical_pick(spark, sf_dir):
     """Quality-aware canonicalization: one representative per near-dup
     cluster, highest quality_score wins (6-dp, doc_id tiebreak) —
-    pipeline.canonicalize_by_quality over the df-capped exact-Jaccard
-    pair list."""
+    pipeline.canonicalize_by_quality over the exact-Jaccard pair
+    list."""
     from search_engine_spark.operators.dedup import ngram_jaccard_pairs
     from search_engine_spark.operators.pipeline import canonicalize_by_quality
 
@@ -1966,21 +1940,13 @@ LEFT JOIN (SELECT doc_id, count(*) AS n_kept,
                   string_agg(span_text, ' ' ORDER BY span_no) AS clean
            FROM kept GROUP BY 1) k USING (doc_id)
 """,
-        "dedup_ngram": _JACCARD_PAIRS_CAPPED,
+        "dedup_ngram": _JACCARD_PAIRS,
         "dedup_minhash": _JACCARD_PAIRS,
         "dedup_simhash": _SIMHASH_PAIRS,
         # connected components over the same exact-Jaccard pairs via a
-        # recursive CTE (min reachable label per node); pairs use the
-        # same df-capped candidate generation as the engine's
-        # ngram_jaccard_pairs call
+        # recursive CTE (min reachable label per node)
         "dup_components": _SHINGLES.replace("WITH ", "WITH RECURSIVE ", 1)
-        + _CAND_CAPPED + """,
-pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN shn na ON na.doc_id = id_a
-  JOIN shn nb ON nb.doc_id = id_b
-  WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
-),
+        + _PAIRS + """,
 edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs
@@ -2209,17 +2175,11 @@ SELECT doc_id, n::BIGINT AS n_tokens,
        (before % 100)::BIGINT AS seq_offset
 FROM c
 """,
-        # connected components (same recursive CTE + df-capped pairs as
+        # connected components (same recursive CTE + pairs as
         # dup_components) -> per-component argmax of the 6-dp-rounded
         # quality score, doc_id ascending on ties
         "canonical_pick": _SHINGLES.replace("WITH ", "WITH RECURSIVE ", 1)
-        + _CAND_CAPPED + """,
-pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN shn na ON na.doc_id = id_a
-  JOIN shn nb ON nb.doc_id = id_b
-  WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
-),
+        + _PAIRS + """,
 edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs
@@ -2241,18 +2201,8 @@ FROM (
                             ORDER BY q6 DESC, doc_id ASC) AS rn
   FROM m) WHERE rn = 1
 """,
-        "curate": _SHINGLES + """,
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-neardup AS (
-  SELECT DISTINCT id_b FROM inter
-  JOIN shn na ON na.doc_id = id_a
-  JOIN shn nb ON nb.doc_id = id_b
-  WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
-),
+        "curate": _SHINGLES + _PAIRS + """,
+neardup AS (SELECT DISTINCT id_b FROM pairs),
 exact_kept AS (
   SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
 )
@@ -2261,18 +2211,8 @@ WHERE doc_id NOT IN (SELECT id_b FROM neardup)
 """,
         # curate + the semantic stage: cosine ≥ 0.45 pairs among the
         # text-stage survivors drop the higher doc_id (vec_id == doc_id)
-        "curate_embed": _SHINGLES + """,
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-neardup AS (
-  SELECT DISTINCT id_b FROM inter
-  JOIN shn na ON na.doc_id = id_a
-  JOIN shn nb ON nb.doc_id = id_b
-  WHERE i * 1.0 / (na.n_sh + nb.n_sh - i) >= 0.8
-),
+        "curate_embed": _SHINGLES + _PAIRS + """,
+neardup AS (SELECT DISTINCT id_b FROM pairs),
 exact_kept AS (
   SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
 ),

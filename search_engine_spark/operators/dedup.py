@@ -5,18 +5,17 @@ near-dup operator returns pairs whose *exact* n-gram Jaccard similarity
 meets the threshold. Candidate generation differs (that is where the
 scale behavior lives); a final exact verification join makes the output
 independent of the generator, so MinHash-LSH / SimHash results are
-bit-identical to the brute-force shingle-join path whenever recall holds
-(probabilistically ~1 at the thresholds used; the gap in real web data
-between planted dups (J≥0.9) and background (J≈0.05) is exactly why
-LSH works).
+bit-identical to the exact ``ngram_jaccard_pairs`` path whenever
+recall holds (probabilistically ~1 at the thresholds used; the gap in
+real web data between planted dups (J≥0.9) and background (J≈0.05) is
+exactly why LSH works).
 
 Scale design:
-* ``ngram_jaccard_pairs`` — the "brute force" here is already the
-  scalable inverted shingle join (pairs only materialize for docs
-  sharing a shingle), NOT a cartesian product. Ubiquitous shingles are
-  the skew hazard → ``max_shingle_df`` drops shingles shared by more
-  than that many docs (standard practice: they carry no dedup signal
-  and quadratically blow up the join).
+* ``ngram_jaccard_pairs`` — the exact path: a prefix-filtered
+  (AllPairs/PPJoin) inverted shingle join. Each doc joins on only its
+  rarest shingles, as many as a pair at the threshold must share one
+  of, so ubiquitous shingles (the skew hazard: m docs → m²/2 join
+  rows) rarely join, and no pair is lost.
 * ``minhash_lsh_pairs`` — 1 Arrow pass for signatures (numpy, vectorized
   64-bit multiply-shift hashing), band-bucket groupBy, exact verify.
   Candidate volume is O(collisions), never O(n²).
@@ -184,12 +183,6 @@ def span_dedup(docs: DataFrame, w: int = 10, id_col: str = "doc_id",
 # shingle table + exact Jaccard verification (shared by all near-dup ops)
 # ---------------------------------------------------------------------------
 
-# Candidate-generation df cap for ngram_jaccard_pairs. The driver-gate
-# oracle SQL mirrors this constant (ADVICE r2: engine and oracle must
-# share candidate-generation semantics, or a pair whose shared shingles
-# all exceed the cap surfaces as a gate failure at larger corpora).
-DEFAULT_MAX_SHINGLE_DF = 256
-
 
 def shingle_table(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
@@ -203,83 +196,66 @@ def shingle_table(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     )
 
 
-def _jaccard_from_shingles(sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact pairwise Jaccard via inverted shingle self-join."""
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-             ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+# Slack on the t·|s| side of the prefix and length bounds: t·|s| in
+# doubles can land just above an integer (0.56 * 25 == 14.000000000000002),
+# which would shorten a prefix or reject a length that the exact bound
+# keeps. The slack only lengthens prefixes and loosens the filter, so it
+# costs candidates and never loses a pair.
+_BOUND_SLACK = 1e-9
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
                         id_col: str = "doc_id", text_col: str = "text",
-                        max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
                         ) -> DataFrame:
     """Exact near-dup pairs (id_a < id_b, jaccard ≥ threshold) over
-    word n-gram shingles. The shuffle is the shingle equi-join —
-    linear in shingle postings, not quadratic in docs.
+    word n-gram shingles, by prefix filtering (AllPairs/PPJoin).
 
-    ``max_shingle_df`` (default on — 256) guards the quadratic hazard:
-    a shingle shared by m docs contributes m² join rows, so ubiquitous
-    shingles blow the self-join up. Shingles with df above the cap are
-    used for *candidate generation* only being dropped there; every
-    candidate is then verified with exact Jaccard over the FULL shingle
-    universe, so reported values are the true Jaccard, never a
-    filtered-universe estimate. The only effect of the cap is recall:
-    a pair whose every shared shingle is ubiquitous is missed — at
-    threshold ≥ 0.5 such pairs share most of their shingles, so this
-    requires an essentially boilerplate-only corpus (document, don't
-    fear).
+    Every doc's shingles are ranked by (global df asc, shingle asc);
+    only the first ``|s| − ⌈t·|s|⌉ + 1`` of them — the prefix — join.
+    Two sets with J ≥ t overlap in at least ⌈t·max(|a|, |b|)⌉
+    shingles, so under one global order their prefixes share one, and
+    |a|, |b| are within a factor t of each other (the length filter).
+    Rare shingles sort first, so the prefix join skips the ubiquitous
+    shingles whose m docs would add m²/2 join rows, yet no pair is
+    lost. Every candidate is verified with exact Jaccard over the full
+    shingle sets.
 
-    The shingle table is persisted across its consumers (df filter,
-    candidate self-join, exact verify — plan audit counted 8 re-scans
-    of the corpus without it, Spark shares no subplans between
-    consumers) and released after the pair list materializes via the
-    same eager-localCheckpoint contract as minhash_lsh_pairs."""
+    The shingle table is persisted across its consumers (df, prefix
+    ranking, exact verify — Spark shares no subplans between consumers)
+    and released after the pair list materializes via the same
+    eager-localCheckpoint contract as minhash_lsh_pairs."""
     from pyspark import StorageLevel
+    from pyspark.sql import Window
 
     sh = shingle_table(_fan_out(docs), n, id_col, text_col).persist(
         StorageLevel.DISK_ONLY
     )
     sh.count()
-    if max_shingle_df is None:
-        verified = _jaccard_from_shingles(sh, threshold)
-    else:
-        rare = (
-            sh.groupBy("shingle")
-            .count()
-            .filter(F.col("count") <= max_shingle_df)
-            .select("shingle")
-        )
-        joinable = sh.join(rare, "shingle")
-        a = joinable.alias("a")
-        b = joinable.alias("b")
-        candidates = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        verified = _verify_pairs(candidates, sh, threshold)
-    out = verified.localCheckpoint(eager=True)
+    t = float(threshold)
+    df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    w = Window.partitionBy("id").orderBy("df", "shingle")
+    ranked = sh.join(df, "shingle").select(
+        "id", "shingle",
+        F.row_number().over(w).alias("pos"),
+        F.count("*").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("n_sh"),
+    )
+    prefix = ranked.filter(
+        F.col("pos")
+        <= F.col("n_sh") - F.ceil(F.col("n_sh") * t - _BOUND_SLACK) + 1
+    )
+    a = prefix.alias("a")
+    b = prefix.alias("b")
+    candidates = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+               & (F.col("a.id") < F.col("b.id")))
+        .filter(F.least("a.n_sh", "b.n_sh")
+                >= F.greatest("a.n_sh", "b.n_sh") * t - _BOUND_SLACK)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    out = _verify_pairs(candidates, sh, t).localCheckpoint(eager=True)
     sh.unpersist()
     return out
 
@@ -829,7 +805,7 @@ def embedding_pairs_exact(emb: DataFrame, threshold: float | None = None,
         ]
     )
 
-    def block_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def block_fn(key, pdf):
         p, q = key
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
             {"id_a": np.int64, "id_b": np.int64, "cos": np.float64}
@@ -928,7 +904,7 @@ def embedding_pairs_lsh(emb: DataFrame, threshold: float = 0.9,
         ]
     )
 
-    def bucket_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket_fn(key, pdf):
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
                 {"id_a": np.int64, "id_b": np.int64, "cos": np.float64}

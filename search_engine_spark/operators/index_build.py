@@ -776,7 +776,6 @@ def build_index(
         t0 = time.time()
         store.write_stage("docmeta", build_docmeta(docs, postings), t0)
         timings["docmeta_s"] = round(time.time() - t0, 3)
-    docmeta = store.read_stage(spark, "docmeta")
 
     if not (resume and store.stage_complete("dictionary")):
         t0 = time.time()
@@ -784,10 +783,10 @@ def build_index(
         timings["dictionary_s"] = round(time.time() - t0, 3)
     dictionary = store.read_stage(spark, "dictionary")
 
-    agg = docmeta.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
+    # the stats read only docmeta and the dictionary, so they come
+    # before the blocks, which need their (n_docs, avgdl)
+    stats = compute_index_stats(store, spark)
+    n_docs, avgdl = stats["total_documents"], stats["avgdl_tokens"]
 
     if not (resume and store.stage_complete("blocks")):
         t0 = time.time()
@@ -796,7 +795,6 @@ def build_index(
         )
         timings["blocks_s"] = round(time.time() - t0, 3)
 
-    stats = compute_index_stats(store, spark)
     store.write_meta(
         {
             "config": cfg.to_dict(),

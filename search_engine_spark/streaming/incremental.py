@@ -62,6 +62,17 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
+# The EngineConfig fields that decide what a segment holds: the
+# extract + tokenize path (and the postings schema) reads them, so
+# segments written under other values hold other terms. k1/b and the
+# query knobs stay free, since the stream scores at query time.
+_SEGMENT_CONFIG = (
+    "min_token_bytes", "max_token_bytes", "remove_numbers",
+    "remove_punctuation", "case_folding", "use_stemmer", "store_positions",
+    "min_article_length", "normalize_urls",
+)
+
+
 def _term_bucket_col(n_buckets: int):
     """md5-prefix term bucket as a Column — md5 (not xxhash64) so the
     DRIVER can compute the same bucket for a query term without a Spark
@@ -121,7 +132,9 @@ class IncrementalIndexer:
         self.segment_compact_after = int(segment_compact_after)
         self.postings_buckets = int(postings_buckets)
         self._live: Optional[_LiveView] = None  # see _view
+        self._seg_config = {k: getattr(cfg, k) for k in _SEGMENT_CONFIG}
         os.makedirs(index_dir, exist_ok=True)
+        self._read_state()  # refuse a mismatched config on open
 
     # -- watermark bookkeeping -----------------------------------------
     @property
@@ -142,6 +155,13 @@ class IncrementalIndexer:
                     st.get("seen_buckets", self.seen_buckets)
                 )
                 self.postings_buckets = int(st.get("postings_buckets", 0))
+                # a state that predates the recorded config adopts ours
+                if st.get("config", self._seg_config) != self._seg_config:
+                    raise ValueError(
+                        f"cannot resume {self.dir}: its segments were "
+                        "written under another EngineConfig; index into "
+                        "a new directory"
+                    )
             return st
         return {"next_doc_id": 0, "segments": [], "seen_dirs": []}
 
@@ -302,6 +322,7 @@ class IncrementalIndexer:
         # never silently mismatch historical partitions (ADVICE r3)
         st["seen_buckets"] = self.seen_buckets
         st["postings_buckets"] = self.postings_buckets
+        st["config"] = self._seg_config
         seen_dirs = seen_dirs + [os.path.join("seen", seg)]
         folded_sidecars: list = []
         if len(seen_dirs) > self.seen_compact_after:

@@ -1,7 +1,11 @@
 """Dedup + similarity operator tests (small deterministic corpora)."""
 
+import warnings
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -155,6 +159,23 @@ def test_embedding_pairs_lsh_finds_planted(spark):
                                      tables=8).collect()
     }
     assert (17, 42) in got
+
+
+def test_embedding_pairs_build_without_eval_type_warning(spark):
+    """Both grouped-map kernels build with no "Cannot infer the eval
+    type from type hints" UserWarning (partial hints trigger it)."""
+    from search_engine_spark.operators.dedup import (
+        embedding_pairs_exact,
+        embedding_pairs_lsh,
+    )
+
+    rows = [(i, [float(i), 1.0]) for i in range(4)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        embedding_pairs_exact(emb, threshold=0.5)
+        embedding_pairs_lsh(emb, threshold=0.9)
+    assert not [w for w in seen if "eval type" in str(w.message)]
 
 
 def test_lsh_production_params_recall_and_pruning(spark):
@@ -373,33 +394,65 @@ def test_span_dedup_matches_python_model_random(spark):
     assert got == expect
 
 
-def test_ngram_jaccard_uncapped_and_df_cap_recall(spark, docs):
-    """max_shingle_df=None (uncapped candidate generation) agrees with
-    brute force; an extreme cap of 1 demonstrates the documented
-    semantics — the cap can only lose candidates (recall), never report
-    a wrong Jaccard value."""
+def test_ngram_jaccard_prefix_bound_at_float_boundary(spark):
+    """J = 14/25 at t = 0.56: 0.56 * 25 is 14.000000000000002 in
+    doubles, so a plain ceil shortens a's prefix to its 11 unshared
+    (df 1) shingles and the length filter rejects |b| = 14. The pair
+    sits exactly on the threshold and must be found."""
     from search_engine_spark.operators.dedup import ngram_jaccard_pairs
 
-    want = brute_jaccard([(r["doc_id"], r["text"]) for r in docs.collect()])
-    uncapped = {
+    toks = [f"w{i:02d}" for i in range(27)]
+    rows = [(0, " ".join(toks)), (1, " ".join(toks[:16]))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5,
-                                     max_shingle_df=None).collect()
+        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.56).collect()
     }
-    assert set(uncapped) == set(want)
-    for k, v in want.items():
-        assert uncapped[k] == pytest.approx(v)
+    assert got == {(0, 1): pytest.approx(14 / 25)}
 
-    capped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5,
-                                     max_shingle_df=1).collect()
-    }
-    # docs 0/2 are identical -> every shared shingle has df >= 2 -> the
-    # pair is invisible to a cap of 1 (recall loss, not a wrong value)
-    assert (0, 2) not in capped
-    for k, v in capped.items():
-        assert v == pytest.approx(want[k])
+
+_VOCAB = ["the", "of", "and", "to", "in", "is", "was", "for", "on", "as"]
+
+
+@st.composite
+def _boilerplate_corpus(draw):
+    """Docs over a 10-word vocabulary, so most shingles are shared by
+    many docs, plus near-copies of earlier docs (a few tokens dropped,
+    replaced or inserted) that land on both sides of each threshold."""
+    words = st.lists(st.sampled_from(_VOCAB), min_size=3, max_size=24)
+    texts = draw(st.lists(words, min_size=2, max_size=12))
+    for src in draw(st.lists(st.integers(0, len(texts) - 1), max_size=6)):
+        copy = list(texts[src])
+        for _ in range(draw(st.integers(0, 3))):
+            i = draw(st.integers(0, len(copy)))
+            op = draw(st.sampled_from(["drop", "replace", "insert"]))
+            if op == "insert" or i == len(copy):
+                copy.insert(i, draw(st.sampled_from(_VOCAB + ["rare"])))
+            elif op == "drop":
+                del copy[i]
+            else:
+                copy[i] = draw(st.sampled_from(_VOCAB))
+        texts.append(copy)
+    return [(i, " ".join(t)) for i, t in enumerate(texts)]
+
+
+@given(rows=_boilerplate_corpus())
+@settings(max_examples=8, deadline=None)
+def test_ngram_jaccard_matches_brute_force_on_boilerplate(spark, rows):
+    """The prefix-filtered join finds exactly the brute-force pairs on
+    corpora where nearly every shingle is ubiquitous."""
+    from search_engine_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for t in (0.5, 0.56, 0.8):
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(docs, n=3, threshold=t).collect()
+        }
+        want = brute_jaccard(rows, threshold=t)
+        assert set(got) == set(want), (t, rows)
+        for k, v in want.items():
+            assert got[k] == pytest.approx(v)
 
 
 def test_ivf_query_batch_matches_single_queries(spark):

@@ -216,11 +216,10 @@ def test_suggest_prefix_pushed_and_dictionary_range_sorted(spark, tmp_path):
         assert hi1 <= lo2, (hi1, lo2)
 
 
-def test_scaling_corpus_urls_unique(spark):
+def test_scaling_corpus_urls_unique(spark, tmp_path):
     from cluster_scaling_bench import generate_corpus
-    import tempfile
 
-    out = os.path.join(tempfile.mkdtemp(prefix="se_test_corpus_"), "pages")
+    out = str(tmp_path / "pages")
     n = generate_corpus(spark, 800, out, chunk=200)
     df = spark.read.parquet(out)
     assert df.count() == n

@@ -1,8 +1,10 @@
 """Structured Streaming: incremental segments, compaction, windowed agg."""
 
+import dataclasses
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.config import EngineConfig
@@ -439,6 +441,22 @@ def test_seen_buckets_persisted_across_resume(spark, tmp_path):
     st = ixer2._read_state()
     assert st["seen_buckets"] == 8
     assert st["next_doc_id"] == 8  # dups 2..5 dropped, 6..7 indexed
+
+
+def test_resume_refuses_changed_tokenizer_config(spark, tmp_path):
+    """Segments tokenized under one config must not be extended under
+    another: reopening with case_folding=False raises, while a k1/b
+    change (scored at query time) still opens."""
+    landing = str(tmp_path / "landing")
+    idx = str(tmp_path / "idx")
+    os.makedirs(landing)
+    _write_batch(spark, landing, _rows(range(0, 3), lambda i: f"Омега doc{i}"))
+    IncrementalIndexer(spark, idx, CFG).start(landing).awaitTermination(120)
+
+    with pytest.raises(ValueError, match="another EngineConfig"):
+        IncrementalIndexer(spark, idx,
+                           dataclasses.replace(CFG, case_folding=False))
+    IncrementalIndexer(spark, idx, dataclasses.replace(CFG, k1=2.0, b=0.5))
 
 
 def test_streaming_boolean_search_matches_batch(spark, tmp_path):
