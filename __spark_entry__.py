@@ -131,7 +131,7 @@ def _stream_indexer(spark: SparkSession, sf_dir: str):
     if key in _STREAMS:
         return _STREAMS[key]
     tag = hashlib.md5(
-        (key + repr(sorted(ENTRY_CFG.to_dict().items())) + "|stream_v1").encode()
+        (key + repr(sorted(ENTRY_CFG.to_dict().items())) + "|stream_v2").encode()
     ).hexdigest()[:12]
     root = os.path.join(tempfile.gettempdir(), f"se_graft_stream_{tag}")
     landing = os.path.join(root, "landing")
@@ -139,7 +139,7 @@ def _stream_indexer(spark: SparkSession, sf_dir: str):
     docs = _docs(spark, sf_dir)
     n_docs = docs.count()
 
-    ixer = IncrementalIndexer(spark, idx, ENTRY_CFG, postings_buckets=8)
+    ixer = IncrementalIndexer(spark, idx, ENTRY_CFG)
     st = ixer._read_state()
     if not (st["segments"] and st["next_doc_id"] == n_docs):
         # stale or partial build (e.g. a crashed prior process) → rebuild
@@ -147,7 +147,7 @@ def _stream_indexer(spark: SparkSession, sf_dir: str):
 
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(landing, exist_ok=True)
-        ixer = IncrementalIndexer(spark, idx, ENTRY_CFG, postings_buckets=8)
+        ixer = IncrementalIndexer(spark, idx, ENTRY_CFG)
         for wave in range(3):
             _as_pages(docs.filter(F.col("doc_id") % 3 == wave)).coalesce(
                 1

@@ -33,7 +33,6 @@ class EngineConfig:
     min_token_bytes: int = 2
     max_token_bytes: int = 50
     remove_numbers: bool = False
-    remove_punctuation: bool = True
     case_folding: bool = True  # ASCII-only, like ds_string.h:395-406
     use_stemmer: bool = False  # reference stemmer is NOT in the index path (SURVEY §0.2)
 

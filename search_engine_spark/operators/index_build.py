@@ -777,6 +777,17 @@ def build_index(
         store.write_stage("docmeta", build_docmeta(docs, postings), t0)
         timings["docmeta_s"] = round(time.time() - t0, 3)
 
+    return finish_index(spark, store, postings, cfg, timings, resume)
+
+
+def finish_index(spark: SparkSession, store: IndexStore, postings: DataFrame,
+                 cfg: EngineConfig, timings: dict,
+                 resume: bool = False) -> IndexStore:
+    """The last stages of an index whose docs, postings and docmeta
+    stages are written, shared by ``build_index`` and the stream's
+    ``compact``: dictionary → ``compute_index_stats`` → blocks →
+    ``meta.json``. ``resume`` skips the stages whose manifest entry is
+    complete."""
     if not (resume and store.stage_complete("dictionary")):
         t0 = time.time()
         store.write_stage("dictionary", build_dictionary(postings), t0)

@@ -9,10 +9,12 @@ module provides the real thing, Lucene-segment style:
   `pages` parquet files → ``foreachBatch``: each micro-batch is
   extracted, tokenized, and appended as a **segment** (docmeta rows +
   postings rows tagged with ``segment_id``). Doc ids continue from a
-  high-water mark persisted in the manifest; Structured Streaming's
-  checkpoint guarantees each input file lands in exactly one epoch, so
-  restarts neither skip nor double-index (epoch replays overwrite their
-  own segment directory — idempotent).
+  high-water mark persisted in ``stream_state.json``; Structured
+  Streaming's checkpoint guarantees each input file lands in exactly
+  one epoch, so restarts neither skip nor double-index (epoch replays
+  overwrite their own segment directory — idempotent). The state
+  records the segment config and bucket moduli; a state in another
+  format or under another config is refused on open.
 * ``search`` / ``search_query`` — BM25 over the accumulated segments
   as a pure relational plan: single-term, boolean AND/OR/NOT, and
   phrase / ``/N`` proximity leaves (token-ordinal ``exists`` checks
@@ -24,8 +26,9 @@ module provides the real thing, Lucene-segment style:
   state's segment list or ``next_doc_id`` drops it. New terms' df cost
   one count job per query, memo hits none, and each term leaf is a
   term-bucket partition-pruned scan scored with its df as a literal.
-* ``compact`` — fold all segments through the batch block builder into
-  a normal ``IndexStore`` index (the segment → base-index merge).
+* ``compact`` — write the segments as the docs/postings/docmeta stages
+  of a normal ``IndexStore`` index and finish it through the batch
+  build's own tail (dictionary, stats, blocks, ``meta.json``).
   Independently, live segments auto-fold into one base segment past
   ``segment_compact_after`` so per-query dataset count stays O(1).
 * ``streaming_term_counts`` — watermarked sliding-window term counts
@@ -68,39 +71,56 @@ PAGES_SCHEMA = T.StructType(
 # query knobs stay free, since the stream scores at query time.
 _SEGMENT_CONFIG = (
     "min_token_bytes", "max_token_bytes", "remove_numbers",
-    "remove_punctuation", "case_folding", "use_stemmer", "store_positions",
+    "case_folding", "use_stemmer", "store_positions",
     "min_article_length", "normalize_urls",
 )
 
+# The segment layout moduli: seen-url sidecars are partitioned by
+# ``pmod(xxhash64(url), SEEN_BUCKETS)`` and segment postings by the
+# md5-prefix term bucket mod ``POSTINGS_BUCKETS``. The state records
+# both with the segment config, since history hashed with other moduli
+# would make the dedup anti-join or the term-bucket filter miss rows.
+SEEN_BUCKETS = 64
+POSTINGS_BUCKETS = 8
 
-def _term_bucket_col(n_buckets: int):
+# Every state with segments carries these keys.
+_STATE_KEYS = ("all_segments", "seen_dirs", "total_doc_len", "config")
+
+
+def _term_bucket_col():
     """md5-prefix term bucket as a Column — md5 (not xxhash64) so the
     DRIVER can compute the same bucket for a query term without a Spark
     job (hashlib mirrors it exactly in `_term_bucket_py`)."""
     return (
         F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10)
         .cast("long")
-        % F.lit(n_buckets)
+        % F.lit(POSTINGS_BUCKETS)
     ).cast("int")
 
 
-def _term_bucket_py(term: str, n_buckets: int) -> int:
+def _term_bucket_py(term: str) -> int:
     import hashlib
 
-    return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % n_buckets
+    digest = hashlib.md5(term.encode("utf-8")).hexdigest()
+    return int(digest[:8], 16) % POSTINGS_BUCKETS
+
+
+def _seg_roots(segs: list, stage: str) -> list:
+    return [os.path.join("segments", s, stage) for s in segs]
 
 
 class IncrementalIndexer:
-    """Segment-appending streaming indexer over a landing directory."""
+    """Segment-appending streaming indexer over a landing directory.
+    Before the first segment commits, queries return no hits and
+    ``docmeta``/``postings``/``compact`` raise ``ValueError``."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cfg: EngineConfig = DEFAULT_CONFIG,
-                 seen_buckets: int = 64, seen_compact_after: int = 16,
-                 segment_compact_after: int = 32, postings_buckets: int = 8):
-        """``seen_buckets`` / ``seen_compact_after`` bound the
-        cross-segment URL dedup (VERDICT r2 #4): each segment writes a
-        url-only ``seen_urls`` sidecar partitioned by
-        ``url_bucket = pmod(xxhash64(url), seen_buckets)``, the
+                 seen_compact_after: int = 16,
+                 segment_compact_after: int = 32):
+        """``seen_compact_after`` bounds the cross-segment URL dedup
+        (VERDICT r2 #4): each segment writes a url-only ``seen_urls``
+        sidecar partitioned by url bucket (``SEEN_BUCKETS``), the
         per-epoch anti-join prunes to the batch's buckets, and once
         more than ``seen_compact_after`` sidecars accumulate they fold
         into one bucketed base — per-epoch dedup cost no longer grows
@@ -113,28 +133,24 @@ class IncrementalIndexer:
         a long-running stream serves queries from O(1) datasets instead
         of one per historical epoch.
 
-        ``postings_buckets`` (VERDICT r3 #6): segment postings are
-        written ``partitionBy(term_bucket)`` (md5-prefix mod buckets),
-        so a single-term ``search`` prunes the at-rest scan to one
-        bucket directory per segment instead of reading every postings
-        file. 0 disables bucketing (legacy layout).
+        Segment postings are written ``partitionBy(term_bucket)``
+        (``POSTINGS_BUCKETS``; VERDICT r3 #6), so a term leaf prunes
+        the at-rest scan to one bucket directory per segment.
 
-        Both bucket moduli are PERSISTED in the state file on first
-        write and adopted from it on resume (ADVICE r3): historical
-        partitions were hashed with the stored modulus, so silently
-        honoring a different constructor arg would make the seen-URL
-        anti-join (or the term-bucket filter) miss everything."""
+        Opening a directory whose state was written by an older version
+        or under another segment config raises ``ValueError``
+        (``_read_state``)."""
         self.spark = spark
         self.cfg = cfg
         self.dir = index_dir
-        self.seen_buckets = int(seen_buckets)
         self.seen_compact_after = int(seen_compact_after)
         self.segment_compact_after = int(segment_compact_after)
-        self.postings_buckets = int(postings_buckets)
         self._live: Optional[_LiveView] = None  # see _view
-        self._seg_config = {k: getattr(cfg, k) for k in _SEGMENT_CONFIG}
+        self._config = {k: getattr(cfg, k) for k in _SEGMENT_CONFIG}
+        self._config.update(seen_buckets=SEEN_BUCKETS,
+                            postings_buckets=POSTINGS_BUCKETS)
         os.makedirs(index_dir, exist_ok=True)
-        self._read_state()  # refuse a mismatched config on open
+        self._read_state()  # refuse a foreign state on open
 
     # -- watermark bookkeeping -----------------------------------------
     @property
@@ -142,28 +158,25 @@ class IncrementalIndexer:
         return os.path.join(self.dir, "stream_state.json")
 
     def _read_state(self) -> dict:
-        if os.path.exists(self._state_path):
-            with open(self._state_path) as f:
-                st = json.load(f)
-            # adopt the moduli the index was actually written with —
-            # a resumed indexer MUST match historical partitions even
-            # if constructed with different args (ADVICE r3). Legacy
-            # state (pre-bucketing segments on disk) pins bucketing
-            # off so new segments match the unbucketed history.
-            if st["segments"] or st.get("all_segments"):
-                self.seen_buckets = int(
-                    st.get("seen_buckets", self.seen_buckets)
-                )
-                self.postings_buckets = int(st.get("postings_buckets", 0))
-                # a state that predates the recorded config adopts ours
-                if st.get("config", self._seg_config) != self._seg_config:
-                    raise ValueError(
-                        f"cannot resume {self.dir}: its segments were "
-                        "written under another EngineConfig; index into "
-                        "a new directory"
-                    )
-            return st
-        return {"next_doc_id": 0, "segments": [], "seen_dirs": []}
+        """The committed state. One with segments must carry every
+        ``_STATE_KEYS`` entry and record our segment config and moduli:
+        segments tokenized or hashed otherwise would be quietly
+        mis-deduplicated or mis-scored, so anything else raises."""
+        if not os.path.exists(self._state_path):
+            return {"next_doc_id": 0, "segments": [], "all_segments": [],
+                    "seen_dirs": [], "total_doc_len": 0}
+        with open(self._state_path) as f:
+            st = json.load(f)
+        if st["segments"] and (
+            any(k not in st for k in _STATE_KEYS)
+            or st["config"] != self._config
+        ):
+            raise ValueError(
+                f"cannot open {self.dir}: its stream state was written by "
+                "an older version or under another EngineConfig; index "
+                "the stream into a new directory"
+            )
+        return st
 
     def _write_state(self, st: dict) -> None:
         tmp = self._state_path + ".tmp"
@@ -171,15 +184,17 @@ class IncrementalIndexer:
             json.dump(st, f, indent=1)
         os.replace(tmp, self._state_path)
 
-    def _read_seen(self, seen_dirs: list) -> DataFrame:
-        """Union of the bucket-partitioned seen-url sidecars. Each root
-        is read separately (multi-root partition discovery conflicts)
-        and unioned — bucket-partition pruning applies per scan."""
+    def _read_union(self, roots: list) -> DataFrame:
+        """Union of parquet datasets under the index dir (segment stages
+        or seen-url sidecars). Each root is read separately, since
+        multi-root partition discovery conflicts, so bucket-partition
+        pruning applies per scan."""
         from functools import reduce
 
+        if not roots:
+            raise ValueError(f"stream {self.dir} has no segments")
         parts = [
-            self.spark.read.parquet(os.path.join(self.dir, d))
-            for d in seen_dirs
+            self.spark.read.parquet(os.path.join(self.dir, r)) for r in roots
         ]
         return reduce(DataFrame.unionByName, parts)
 
@@ -202,26 +217,16 @@ class IncrementalIndexer:
         # the live list — segment compaction folds live segment names
         # into a base, which must not make a crash-replayed epoch look
         # unprocessed
-        done = set(st.get("all_segments", st["segments"]))
+        done = set(st["all_segments"])
         if seg in done:
             return  # replayed epoch, already fully committed
         if self.cfg.normalize_urls:
             batch = batch.withColumn("url", normalize_url_col(F.col("url")))
         deduped = dedup_pages(batch)
         bucket_col = F.pmod(F.xxhash64(F.col("url")),
-                            F.lit(self.seen_buckets)).cast("int")
-        seen_dirs = st.get("seen_dirs", [])
-        if not seen_dirs and st["segments"]:
-            # legacy state (ADVICE r3): segments written by a
-            # pre-sidecar version carry no seen_urls datasets — fall
-            # back to the unbounded docmeta-url anti-join for THIS
-            # epoch (first-writer-wins must not silently break); the
-            # sidecar written below starts the bounded scheme, and the
-            # next compaction window folds it as usual.
-            deduped = deduped.join(
-                self.docmeta().select("url"), "url", "left_anti"
-            )
-        elif seen_dirs:
+                            F.lit(SEEN_BUCKETS)).cast("int")
+        seen_dirs = st["seen_dirs"]
+        if seen_dirs:
             # cross-segment dedup: first writer wins across epochs too.
             # The seen-set lives in url-only sidecars PARTITIONED BY
             # url_bucket; the anti-join (a) pushes `url_bucket IN
@@ -235,7 +240,7 @@ class IncrementalIndexer:
                 int(r[0])
                 for r in with_b.select("url_bucket").distinct().collect()
             ]
-            seen = self._read_seen(seen_dirs).filter(
+            seen = self._read_union(seen_dirs).filter(
                 F.col("url_bucket").isin(batch_buckets)
             )
             self._last_seen_scan = seen  # plan-shape tests
@@ -292,8 +297,7 @@ class IncrementalIndexer:
         # url-only seen sidecar, partitioned by url_bucket (overwrite →
         # idempotent on epoch replay like the segment itself). Sidecars
         # live OUTSIDE the segment dir (seen/<seg>) so folded segments
-        # can be garbage-collected whole (VERDICT r4 #3); legacy
-        # segments/<seg>/seen_urls paths in seen_dirs still read fine.
+        # can be garbage-collected whole (VERDICT r4 #3).
         docs.select("url").withColumn("url_bucket", bucket_col).write.mode(
             "overwrite"
         ).partitionBy("url_bucket").parquet(
@@ -301,28 +305,10 @@ class IncrementalIndexer:
         )
         docs.unpersist()
         st["next_doc_id"] += int(n)
-        if "total_doc_len" not in st and st["segments"]:
-            # legacy-state backfill (ADVICE r4): historical epochs
-            # predate the running total — seeding it from 0 here would
-            # silently understate avgdl (and skew every BM25 score)
-            # forever after. Aggregate the on-disk docmeta ONCE; the new
-            # segment is not in st["segments"] yet, so this counts
-            # exactly the pre-upgrade corpus.
-            legacy_len = (
-                self._read_segments(st["segments"], "docmeta")
-                .agg(F.sum("doc_len"))
-                .collect()[0][0]
-                or 0
-            )
-            st["total_doc_len"] = int(legacy_len)
-        st["total_doc_len"] = int(st.get("total_doc_len", 0)) + int(batch_len)
+        st["total_doc_len"] += int(batch_len)
         st["segments"].append(seg)
         st["all_segments"] = sorted(done | {seg})
-        # persist the moduli actually used so a resumed indexer can
-        # never silently mismatch historical partitions (ADVICE r3)
-        st["seen_buckets"] = self.seen_buckets
-        st["postings_buckets"] = self.postings_buckets
-        st["config"] = self._seg_config
+        st["config"] = self._config
         seen_dirs = seen_dirs + [os.path.join("seen", seg)]
         folded_sidecars: list = []
         if len(seen_dirs) > self.seen_compact_after:
@@ -330,7 +316,7 @@ class IncrementalIndexer:
             # reads O(1) datasets instead of one per historical segment
             merged_rel = os.path.join("seen_base", f"upto_{epoch_id:06d}")
             (
-                self._read_seen(seen_dirs)
+                self._read_union(seen_dirs)
                 .write.mode("overwrite")
                 .partitionBy("url_bucket")
                 .parquet(os.path.join(self.dir, merged_rel))
@@ -347,12 +333,11 @@ class IncrementalIndexer:
             base = f"base_{epoch_id:06d}"
             base_dir = os.path.join(self.dir, "segments", base)
             self._write_seg_postings(
-                self._read_segments(st["segments"], "postings"),
+                self._read_union(_seg_roots(st["segments"], "postings")),
                 os.path.join(base_dir, "postings"),
             )
-            self._read_segments(st["segments"], "docmeta").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(base_dir, "docmeta"))
+            self._read_union(_seg_roots(st["segments"], "docmeta")).write.mode(
+                "overwrite").parquet(os.path.join(base_dir, "docmeta"))
             folded = list(st["segments"])
             st["segments"] = [base]
             st["all_segments"] = sorted(set(st["all_segments"]) | {base})
@@ -361,53 +346,20 @@ class IncrementalIndexer:
         # (crash-safe order: write base → commit state → delete; a crash
         # between commit and delete just re-deletes nothing next fold,
         # and a crash before commit leaves the live list pointing at the
-        # still-present old segments — VERDICT r4 #3). Only
-        # postings/docmeta are removed: a LEGACY segment dir may still
-        # hold a seen_urls sidecar referenced by seen_dirs.
-        self._gc_segments(folded, keep=set(st["seen_dirs"]))
-        # sidecars folded into a seen_base are likewise dead at rest
+        # still-present old segments — VERDICT r4 #3). Sidecars folded
+        # into a seen_base are likewise dead at rest.
         import shutil
 
-        for d in folded_sidecars:
+        for d in [os.path.join("segments", s) for s in folded] + folded_sidecars:
             shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
 
-    def _gc_segments(self, segs: list, keep: set) -> None:
-        import shutil
-
-        for s in segs:
-            seg_dir = os.path.join(self.dir, "segments", s)
-            for stage in ("postings", "docmeta"):
-                shutil.rmtree(os.path.join(seg_dir, stage), ignore_errors=True)
-            legacy_sidecar = os.path.join("segments", s, "seen_urls")
-            if legacy_sidecar not in keep:
-                shutil.rmtree(seg_dir, ignore_errors=True)
-
     def _write_seg_postings(self, postings: DataFrame, path: str) -> None:
-        if self.postings_buckets:
-            (
-                postings.withColumn(
-                    "term_bucket", _term_bucket_col(self.postings_buckets)
-                )
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(path)
-            )
-        else:  # legacy unbucketed layout
-            postings.drop("term_bucket").write.mode("overwrite").parquet(path)
-
-    def _read_segments(self, segs: list, stage: str) -> DataFrame:
-        """Union of per-segment reads — each root read separately so
-        partition discovery works per segment (multi-root discovery
-        conflicts, same as the seen sidecars)."""
-        from functools import reduce
-
-        parts = [
-            self.spark.read.parquet(
-                os.path.join(self.dir, "segments", s, stage)
-            )
-            for s in segs
-        ]
-        return reduce(DataFrame.unionByName, parts)
+        (
+            postings.withColumn("term_bucket", _term_bucket_col())
+            .write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(path)
+        )
 
     # -- public API -------------------------------------------------------
     def start(self, landing_dir: str, checkpoint_dir: Optional[str] = None,
@@ -429,17 +381,21 @@ class IncrementalIndexer:
         return writer.start()
 
     def docmeta(self) -> DataFrame:
-        return self._read_segments(self._read_state()["segments"], "docmeta")
+        segs = self._read_state()["segments"]
+        return self._read_union(_seg_roots(segs, "docmeta"))
 
     def postings(self) -> DataFrame:
-        return self._read_segments(self._read_state()["segments"], "postings")
+        segs = self._read_state()["segments"]
+        return self._read_union(_seg_roots(segs, "postings"))
 
-    def _view(self) -> "_LiveView":
-        """The committed live segments as queries read them; rebuilt
-        only when the state's segment list or ``next_doc_id`` moved (an
-        epoch or a fold committed), so the segments a fold deleted are
-        never read."""
-        st = self._read_state()  # also adopts persisted buckets
+    def _view(self) -> Optional["_LiveView"]:
+        """The committed live segments as queries read them, or None
+        while the stream has none; rebuilt only when the state's segment
+        list or ``next_doc_id`` moved (an epoch or a fold committed), so
+        the segments a fold deleted are never read."""
+        st = self._read_state()
+        if not st["segments"]:
+            return None
         key = (tuple(st["segments"]), st["next_doc_id"])
         if self._live is None or self._live.key != key:
             self._live = _LiveView(self, st, key)
@@ -451,11 +407,9 @@ class IncrementalIndexer:
         new = [t for t in terms if t not in view.df]
         if not new:
             return
-        rows = view.postings
-        if self.postings_buckets:
-            rows = rows.filter(F.col("term_bucket").isin(
-                sorted({_term_bucket_py(t, self.postings_buckets) for t in new})
-            ))
+        rows = view.postings.filter(F.col("term_bucket").isin(
+            sorted({_term_bucket_py(t) for t in new})
+        ))
         got = dict(
             rows.filter(F.col("term").isin(new)).groupBy("term").count().collect()
         )
@@ -468,9 +422,9 @@ class IncrementalIndexer:
         from search_engine_spark.operators.query_eval import top_k
 
         k = top_k(k, self.cfg)
-        if k == 0:
+        view = self._view() if k else None
+        if view is None:
             return self._no_hits()
-        view = self._view()
         self._lookup_dfs(view, [term])
         scored = self._term_scores_seg(view, term)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -481,12 +435,9 @@ class IncrementalIndexer:
     def _term_hits(self, postings: DataFrame, term: str) -> DataFrame:
         """One term's segment postings rows: term-bucket pruned at rest,
         then term-filtered."""
-        if self.postings_buckets:
-            postings = postings.filter(
-                F.col("term_bucket")
-                == _term_bucket_py(term, self.postings_buckets)
-            )
-        return postings.filter(F.col("term") == term)
+        return postings.filter(
+            F.col("term_bucket") == _term_bucket_py(term)
+        ).filter(F.col("term") == term)
 
     def _term_scores_seg(self, view: "_LiveView", term: str) -> DataFrame:
         """One term's (doc_id, score) over the long-form segment
@@ -517,15 +468,16 @@ class IncrementalIndexer:
         its df memo cost one count job, so a query whose terms are all
         memoized runs only its scoring jobs. ``k`` follows the batch
         engine's rule (``query_eval.top_k``): k < 0 raises, k == 0
-        returns no hits without reading anything."""
+        returns no hits without reading anything, as does a stream
+        with no segments."""
         from search_engine_spark.operators.query_eval import eval_tree, top_k
         from search_engine_spark.plans import query_parser as qp
 
         k = top_k(k, self.cfg)
         ast = qp.parse(query)
-        if ast is None or k == 0:
+        view = self._view() if ast is not None and k else None
+        if view is None:
             return self._no_hits()
-        view = self._view()
         self._lookup_dfs(view, qp.extract_terms(ast))
 
         def positions(term: str) -> DataFrame:
@@ -548,20 +500,23 @@ class IncrementalIndexer:
         return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def compact(self, out_dir: str):
-        """Merge all segments into a batch IndexStore (blocks + dict)."""
-        from search_engine_spark.operators.index_build import (
-            build_blocks,
-            build_dictionary,
-        )
+        """Merge the live segments into a batch IndexStore. The segments
+        supply the docs, postings and docmeta stages; the batch build's
+        own tail (``index_build.finish_index``) adds the dictionary,
+        stats and blocks, so the index records the same config and
+        ``meta.json`` stats as a ``build_index`` over the same pages.
+        Raises ``ValueError`` on a stream with no segments."""
+        from search_engine_spark.operators.index_build import finish_index
         from search_engine_spark.sources.index_store import IndexStore
 
         import time
 
-        store = IndexStore(out_dir)
         # term_bucket is a segment-layout detail (at-rest pruning);
         # the batch store partitions blocks its own way
         postings = self.postings().drop("term_bucket")
         meta = self.docmeta()
+        store = IndexStore(out_dir)
+        store.bind_config(self.cfg.to_dict(), resume=False)
         t0 = time.time()
         store.write_stage("docs", meta.drop("doc_len", "unique_terms"), t0)
         store.write_stage("postings", postings, t0)
@@ -569,60 +524,32 @@ class IncrementalIndexer:
         # layout): text lives once, in the docs stage — writing meta
         # verbatim here would store the corpus text twice at rest
         store.write_stage("docmeta", meta.drop("text"), t0)
-        dictionary = build_dictionary(postings)
-        store.write_stage("dictionary", dictionary, t0)
-        agg = meta.agg(
-            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 1.0)
-        store.write_stage(
-            "blocks",
-            build_blocks(postings, dictionary, self.cfg, n_docs, avgdl),
-            t0,
-        )
-        store.write_meta(
-            {
-                "config": self.cfg.to_dict(),
-                "n_docs": n_docs,
-                "avgdl": avgdl,
-                "stats": {},
-                "timings": {"compact_s": round(time.time() - t0, 3)},
-            }
-        )
-        return store
+        timings = {"segments_s": round(time.time() - t0, 3)}
+        return finish_index(self.spark, store, postings, self.cfg, timings)
 
 
 class _LiveView:
     """What queries read of one commit of the live segments: the
     ``postings`` and (on first use) ``docmeta`` frames, each read once
     (a read costs one Parquet footer job per segment); the corpus
-    ``stats`` (n, avgdl); and ``df``, the term → df memo. ``key`` is
+    ``stats`` (n, avgdl) from the state; and ``df``, the term → df memo. ``key`` is
     the commit: the state's segment list and ``next_doc_id``."""
 
     def __init__(self, ixer: IncrementalIndexer, st: dict, key: tuple):
         self.key = key
-        self._st = st
-        self._read = lambda stage: ixer._read_segments(st["segments"], stage)
+        self._read = lambda stage: ixer._read_union(
+            _seg_roots(st["segments"], stage)
+        )
         self.postings = self._read("postings")
         self.df: dict = {}
+        # ids are dense, so n is next_doc_id; avgdl is the running
+        # total_doc_len over it (1.0 while the segments hold no docs)
+        n = float(st["next_doc_id"])
+        self.stats = (n, (st["total_doc_len"] / n if n else 0.0) or 1.0)
 
     @cached_property
     def docmeta(self) -> DataFrame:
         return self._read("docmeta")
-
-    @cached_property
-    def stats(self) -> tuple:
-        """(n, avgdl) from the state file when present — ids are dense
-        so n == next_doc_id — else one aggregation scan of docmeta
-        (legacy state without ``total_doc_len``)."""
-        st = self._st
-        if st["next_doc_id"] and "total_doc_len" in st:
-            n = float(st["next_doc_id"])
-            return n, (float(st["total_doc_len"]) / n or 1.0)
-        agg = self.docmeta.agg(
-            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        return float(agg["n"]), float(agg["avgdl"] or 1.0)
 
 
 def streaming_term_counts(

@@ -95,6 +95,14 @@ def test_streaming_parallel_id_assignment(spark, tmp_path):
 
 
 def test_compact_matches_batch_search(spark, tmp_path):
+    """A compacted stream is a batch index: same scores as the segment
+    search, the manifest records the config, and meta.json carries the
+    stats a build_index over the same pages computes (every field is
+    independent of doc-id order), so a cached engine loads its driver
+    directory."""
+    import json
+
+    from search_engine_spark.operators.index_build import build_index
     from search_engine_spark.operators.query_eval import SearchEngine
 
     landing = str(tmp_path / "landing")
@@ -119,6 +127,15 @@ def test_compact_matches_batch_search(spark, tmp_path):
     assert "text" not in store.read_stage(spark, "docmeta").columns
     assert "text" in store.read_stage(spark, "docs").columns
 
+    built = build_index(spark, spark.read.parquet(landing),
+                        str(tmp_path / "built"), CFG)
+    meta = store.read_meta()
+    assert meta["stats"] == built.read_meta()["stats"]
+    assert meta["stats"]["total_documents"] == 8
+    with open(os.path.join(out, "manifest.json")) as f:
+        assert json.load(f)["config"] == CFG.to_dict()
+    assert eng.directory_loaded
+
 
 def test_cross_segment_dedup_bucket_pruned_and_compacted(spark, tmp_path):
     """VERDICT r2 #4: the per-epoch URL dedup must (a) read the seen-set
@@ -131,8 +148,7 @@ def test_cross_segment_dedup_bucket_pruned_and_compacted(spark, tmp_path):
     os.makedirs(landing)
     text = lambda i: f"сигма тау doc{i} токен"
 
-    ixer = IncrementalIndexer(spark, idx, CFG, seen_buckets=8,
-                              seen_compact_after=2)
+    ixer = IncrementalIndexer(spark, idx, CFG, seen_compact_after=2)
     # epoch 1: urls 0..5
     _write_batch(spark, landing, _rows(range(0, 6), text))
     ixer.start(landing).awaitTermination(120)
@@ -316,44 +332,6 @@ def test_folded_segments_garbage_collected(spark, tmp_path):
     assert len(hits) == 21 and hits[0]["score"] >= hits[-1]["score"]
 
 
-def test_legacy_total_doc_len_backfilled_on_resume(spark, tmp_path):
-    """ADVICE r4: resuming over a pre-round-4 state (segments present,
-    no total_doc_len key) must backfill the running token total from the
-    on-disk docmeta ONCE — not seed it from 0, which would understate
-    avgdl and skew every post-resume BM25 score."""
-    import json as _json
-
-    landing = str(tmp_path / "landing")
-    idx = str(tmp_path / "idx")
-    os.makedirs(landing)
-    text = lambda i: f"хи пси doc{i} " + "хи " * (i % 4)
-
-    ixer = IncrementalIndexer(spark, idx, CFG)
-    _write_batch(spark, landing, _rows(range(0, 6), text))
-    ixer.start(landing).awaitTermination(120)
-
-    sp = os.path.join(idx, "stream_state.json")
-    with open(sp) as f:
-        st = _json.load(f)
-    st.pop("total_doc_len")  # simulate the pre-round-4 state shape
-    with open(sp, "w") as f:
-        _json.dump(st, f)
-    # a legacy state's (n, avgdl) come from one docmeta scan per commit
-    ixer2 = IncrementalIndexer(spark, idx, CFG)
-    legacy = ixer2.docmeta().agg(F.sum("doc_len")).collect()[0][0]
-    n, avgdl = ixer2._view().stats
-    assert n == 6 and abs(avgdl - legacy / 6.0) < 1e-9
-
-    _write_batch(spark, landing, _rows(range(6, 9), text))
-    ixer2.start(landing).awaitTermination(120)
-    st = ixer2._read_state()
-    truth = ixer2.docmeta().agg(F.sum("doc_len")).collect()[0][0]
-    assert st["total_doc_len"] == truth, (st["total_doc_len"], truth)
-    # and the post-resume scores use the true avgdl
-    n, avgdl = ixer2._view().stats
-    assert n == 9 and abs(avgdl - truth / 9.0) < 1e-9
-
-
 def test_segment_postings_term_bucket_pruned(spark, tmp_path):
     """VERDICT r3 #6: segment postings are partitioned by term_bucket at
     rest and search() adds the driver-computed bucket filter, so the
@@ -364,7 +342,7 @@ def test_segment_postings_term_bucket_pruned(spark, tmp_path):
     os.makedirs(landing)
     text = lambda i: f"лямбда мю ню doc{i} токен{i % 7}"
 
-    ixer = IncrementalIndexer(spark, idx, CFG, postings_buckets=8)
+    ixer = IncrementalIndexer(spark, idx, CFG)
     for lo in (0, 5):
         _write_batch(spark, landing, _rows(range(lo, lo + 5), text))
         ixer.start(landing).awaitTermination(120)
@@ -381,72 +359,14 @@ def test_segment_postings_term_bucket_pruned(spark, tmp_path):
     assert "PushedFilters" in plan and "EqualTo(term," in plan, plan
 
 
-def test_legacy_state_without_sidecars_still_dedups(spark, tmp_path):
-    """ADVICE r3: a state file from a pre-sidecar version (segments
-    populated, no seen_dirs key) must fall back to the docmeta-url
-    anti-join — resuming a pre-existing index must not re-index
-    already-seen URLs."""
-    import json as _json
-
-    landing = str(tmp_path / "landing")
-    idx = str(tmp_path / "idx")
-    os.makedirs(landing)
-    text = lambda i: f"кси омикрон doc{i}"
-
-    ixer = IncrementalIndexer(spark, idx, CFG, postings_buckets=0)
-    _write_batch(spark, landing, _rows(range(0, 6), text))
-    ixer.start(landing).awaitTermination(120)
-
-    # simulate the legacy state shape: segments but no sidecar keys
-    sp = os.path.join(idx, "stream_state.json")
-    with open(sp) as f:
-        st = _json.load(f)
-    for key in ("seen_dirs", "seen_buckets", "postings_buckets",
-                "all_segments"):
-        st.pop(key, None)
-    with open(sp, "w") as f:
-        _json.dump(st, f)
-
-    # resume with a fresh indexer: urls 2..7 — 2..5 are dups
-    ixer2 = IncrementalIndexer(spark, idx, CFG)
-    _write_batch(spark, landing, _rows(range(2, 8), text))
-    ixer2.start(landing).awaitTermination(120)
-    st = ixer2._read_state()
-    assert st["next_doc_id"] == 8
-    urls = {r["url"] for r in ixer2.docmeta().collect()}
-    assert len(urls) == 8  # first-writer-wins held across the resume
-    # legacy segments carry no bucketed postings → bucketing pinned off
-    assert st["postings_buckets"] == 0
-
-
-def test_seen_buckets_persisted_across_resume(spark, tmp_path):
-    """ADVICE r3: the bucket modulus the sidecars were written with is
-    stored in state and wins over a different constructor arg on
-    resume — otherwise historical partitions hash with the old modulus
-    and dedup silently fails."""
-    landing = str(tmp_path / "landing")
-    idx = str(tmp_path / "idx")
-    os.makedirs(landing)
-    text = lambda i: f"пи сигма doc{i}"
-
-    ixer = IncrementalIndexer(spark, idx, CFG, seen_buckets=8)
-    _write_batch(spark, landing, _rows(range(0, 6), text))
-    ixer.start(landing).awaitTermination(120)
-    assert ixer._read_state()["seen_buckets"] == 8
-
-    # resume with a DIFFERENT modulus: the stored one must win
-    ixer2 = IncrementalIndexer(spark, idx, CFG, seen_buckets=32)
-    _write_batch(spark, landing, _rows(range(2, 8), text))
-    ixer2.start(landing).awaitTermination(120)
-    st = ixer2._read_state()
-    assert st["seen_buckets"] == 8
-    assert st["next_doc_id"] == 8  # dups 2..5 dropped, 6..7 indexed
-
-
 def test_resume_refuses_changed_tokenizer_config(spark, tmp_path):
     """Segments tokenized under one config must not be extended under
     another: reopening with case_folding=False raises, while a k1/b
-    change (scored at query time) still opens."""
+    change (scored at query time) still opens. A state that lacks a key
+    the current code writes, or records other bucket moduli, raises on
+    open too."""
+    import json
+
     landing = str(tmp_path / "landing")
     idx = str(tmp_path / "idx")
     os.makedirs(landing)
@@ -457,6 +377,40 @@ def test_resume_refuses_changed_tokenizer_config(spark, tmp_path):
         IncrementalIndexer(spark, idx,
                            dataclasses.replace(CFG, case_folding=False))
     IncrementalIndexer(spark, idx, dataclasses.replace(CFG, k1=2.0, b=0.5))
+
+    sp = os.path.join(idx, "stream_state.json")
+    with open(sp) as f:
+        good = f.read()
+    for case in ("total_doc_len", "seen_dirs", "all_segments", "config",
+                 "seen_buckets", "postings_buckets"):
+        st = json.loads(good)
+        if case in st:
+            st.pop(case)  # a key the current code writes is missing
+        else:
+            st["config"][case] //= 2  # the state records another modulus
+        with open(sp, "w") as f:
+            json.dump(st, f)
+        try:
+            IncrementalIndexer(spark, idx, CFG)
+        except ValueError as e:
+            assert "older version" in str(e), case
+        else:
+            pytest.fail(f"a state edited at {case} opened")
+    with open(sp, "w") as f:
+        f.write(good)
+    IncrementalIndexer(spark, idx, CFG)
+
+
+def test_empty_stream_has_no_hits(spark, tmp_path):
+    """A stream that has ingested nothing answers queries with no hits,
+    and its docmeta, postings and compaction raise a ValueError."""
+    ixer = IncrementalIndexer(spark, str(tmp_path / "idx"), CFG)
+    assert ixer.search("альфа").collect() == []
+    assert ixer.search_query("альфа || бета", 5).collect() == []
+    for read in (ixer.docmeta, ixer.postings,
+                 lambda: ixer.compact(str(tmp_path / "out"))):
+        with pytest.raises(ValueError, match="no segments"):
+            read()
 
 
 def test_streaming_boolean_search_matches_batch(spark, tmp_path):
