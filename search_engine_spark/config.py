@@ -24,7 +24,7 @@ All tunables in one place. Reference parity notes:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import asdict, dataclass, fields
 
 
 @dataclass(frozen=True)
@@ -34,7 +34,6 @@ class EngineConfig:
     max_token_bytes: int = 50
     remove_numbers: bool = False
     case_folding: bool = True  # ASCII-only, like ds_string.h:395-406
-    use_stemmer: bool = False  # reference stemmer is NOT in the index path (SURVEY §0.2)
 
     # BM25 (engine-defined; see module docstring)
     k1: float = 1.2
@@ -65,6 +64,15 @@ class EngineConfig:
 
     @staticmethod
     def from_dict(d: dict) -> "EngineConfig":
+        """The config an index recorded; ``ValueError`` if it names
+        fields this version does not have (an index built by an older
+        version, which must be rebuilt)."""
+        unknown = sorted(set(d) - {f.name for f in fields(EngineConfig)})
+        if unknown:
+            raise ValueError(
+                f"index config has fields this version does not know: "
+                f"{', '.join(unknown)}; rebuild the index"
+            )
         return EngineConfig(**d)
 
 

@@ -1,10 +1,9 @@
-"""Truncation "stemmer" — reference parity, OFF by default.
+"""Truncation "stemmer" — the standalone T7 operator, reference parity.
 
 The reference ships a standalone byte-truncation stub
 (``cpp_modules/stemmer/src/stemmer.cpp:7-30``) that is NOT referenced by
 the index or search modules (SURVEY.md §0 fact 2); only the stemmer CLI
-and its tests use it. We keep it as an optional, off-by-default stage
-(``EngineConfig.use_stemmer``).
+and its tests use it. Likewise here: no index or query path stems.
 
 Semantics (byte-oriented, like ``ds::String``):
 * len(bytes) < 3  -> ASCII-lowercased word unchanged

@@ -307,8 +307,8 @@ def batch_tokens_lists(texts, cfg: EngineConfig = DEFAULT_CONFIG):
     ``(offsets, values)`` with ``offsets`` an int32 array of length
     n+1 (doc i's tokens are ``values[offsets[i]:offsets[i+1]]``) and
     ``values`` an object array of str. One decode per DISTINCT token.
-    The single home of the kept-stream boundary math shared by
-    analytics.tokens_df and tokenize_series."""
+    The single home of the kept-stream boundary math, used by
+    analytics.tokens_df."""
     import numpy as np
 
     n = len(texts)
@@ -344,14 +344,3 @@ def doc_term_stats(
             agg.setdefault(tok, []).append(ordinal)
     for tok, positions in agg.items():
         yield _decode(tok), len(positions), positions
-
-
-def tokenize_series(s: pd.Series, cfg: EngineConfig = DEFAULT_CONFIG) -> pd.Series:
-    """Vectorized entry point for pandas UDFs (T5): Series[str] ->
-    Series[list[str]], via the batch factorize path (one decode per
-    distinct token) rather than per-row tokenize_text."""
-    offsets, vals = batch_tokens_lists(list(s), cfg)
-    return pd.Series(
-        [list(vals[offsets[i]:offsets[i + 1]]) for i in range(len(s))],
-        index=s.index,
-    )

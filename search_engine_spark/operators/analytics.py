@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
+from search_engine_spark.operators.index_build import global_ordinal
 
 _TOKENS_SCHEMA = T.StructType(
     [
@@ -79,15 +80,6 @@ def term_freq(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     )
 
 
-def _global_ordinal(df: DataFrame, sort_cols, col_name: str,
-                    partitions: int = 64) -> DataFrame:
-    """Shared two-pass global ordinal (see index_build.global_ordinal —
-    eagerly materialized, cache released)."""
-    from search_engine_spark.operators.index_build import global_ordinal
-
-    return global_ordinal(df, sort_cols, col_name, partitions)
-
-
 def zipf_rank_table(freqs: DataFrame,
                     window_threshold: int = 4_000_000,
                     n_terms: int | None = None) -> DataFrame:
@@ -113,7 +105,7 @@ def zipf_rank_table(freqs: DataFrame,
         return freqs.select(
             F.row_number().over(w).cast("long").alias("rank"), "term", "freq"
         )
-    return _global_ordinal(freqs, order, "_ord").select(
+    return global_ordinal(freqs, order, "_ord").select(
         (F.col("_ord") + 1).cast("long").alias("rank"), "term", "freq"
     )
 
@@ -209,7 +201,7 @@ def gini(freqs: DataFrame, window_threshold: int = 4_000_000) -> DataFrame:
         w = Window.orderBy(*order)
         ranked = freqs.withColumn("i", F.row_number().over(w))
     else:
-        ranked = _global_ordinal(freqs, order, "_ord").withColumn(
+        ranked = global_ordinal(freqs, order, "_ord").withColumn(
             "i", F.col("_ord") + 1
         )
     return ranked.agg(

@@ -3,18 +3,23 @@
 Spark-first pipeline, one tokenize pass, explicit partitioning::
 
     pages (url, warc_ts, html, text, lang)
-      │  ONE url-range shuffle: keep-first dedup (E13) + extraction
-      │  (E2-E3) fused in a single sorted Arrow pass; dense doc_id via
-      │  two-pass per-partition offsets (SURVEY §7.1 — no global sort)
+      │  build_docs: url normalization (E12), then ONE url-range
+      │  shuffle; keep-first dedup (E13), extraction (E2-E3) and the
+      │  min_article_length filter fused in a single sorted Arrow pass;
+      │  dense url-ordered doc_id via two-pass per-partition offsets
+      │  (SURVEY §7.1 — no global sort)
       ▼
     docs     (doc_id, url, title, lang, text)            ← text at rest, once
-      ▼
-    docmeta  (doc_id, url, title, lang, doc_len, unique_terms)
-      │  tokenize+per-doc aggregate fused in one mapInPandas (B1:
-      │  inverted_index.cpp:46-68 semantics), sortWithinPartitions →
+      │  build_postings: tokenize + per-doc aggregate fused in one
+      │  mapInPandas (B1: inverted_index.cpp:46-68 semantics),
+      │  sortWithinPartitions →
       ▼
     postings (term, doc_id, tf, doc_len[, positions])   ← sorted runs
-      │  groupBy(term) partial+final agg
+      │  build_docmeta: per-doc Σtf / #terms joined back to docs
+      ▼
+    docmeta  (doc_id, url, title, lang, doc_len, unique_terms)
+      ·
+    postings │  groupBy(term) partial+final agg
       ▼
     dictionary (term, df, cf)                           (B7)
       │  heavy terms (df > salt_df_threshold) broadcast back; salt =
@@ -25,10 +30,15 @@ Spark-first pipeline, one tokenize pass, explicit partitioning::
     blocks  (term, block_id, doc_count, min_doc, max_doc, max_tf,
              max_stf, max_score, doc_gaps, tfs)          (B9 + block-max)
 
-Each stage persists through :class:`IndexStore` and is checkpoint-
-resumable via the manifest (S13 model). At 10^12 docs the same plan
-holds: every shuffle is keyed and bounded (term-hash × salt), the only
-driver-side data are per-partition counts and the heavy-term list.
+The head (build_docs → build_postings → build_docmeta) is also how a
+streaming epoch builds its segment (``streaming/incremental.py``): it
+offsets the ids by the stream's high-water mark and keeps ``text`` in
+the segment docmeta. The tail (``finish_index``) is shared with stream
+compaction. Each stage persists through :class:`IndexStore` and is
+checkpoint-resumable via the manifest (S13 model). At 10^12 docs the
+same plan holds: every shuffle is keyed and bounded (term-hash × salt),
+the only driver-side data are per-partition counts and the heavy-term
+list.
 """
 
 from __future__ import annotations
@@ -39,42 +49,26 @@ from typing import Iterable, Iterator, Optional
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.functions import codec
-from search_engine_spark.functions.stemmer import stem_text_token
-from search_engine_spark.functions.tokenizer import (
-    _decode,
-    batch_token_codes,
-    doc_term_stats,
-)
+from search_engine_spark.functions.tokenizer import _decode, batch_token_codes
 from search_engine_spark.sources.index_store import IndexStore
 
 # --------------------------------------------------------------------------
-# stage 1: docmeta (dedup → extract → doc_id)
+# stage 1: docs (dedup → extract → doc_id) and docmeta
 # --------------------------------------------------------------------------
 
-def dedup_pages(pages: DataFrame) -> DataFrame:
-    """Keep the earliest warc_ts per url (inverted_index.cpp:20-25:
-    first writer wins; warc_ts is the deterministic 'first')."""
-    if "warc_ts" not in pages.columns:
-        return pages.dropDuplicates(["url"])
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").asc_nulls_last())
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def _extract_map(cfg: EngineConfig, dedup_sorted: bool = False):
-    """Vectorized extract (E2-E3). With ``dedup_sorted=True`` the input
-    partition is (url, warc_ts)-sorted and url-range-partitioned, so
-    keep-first-per-url dedup (E13) happens in the same pass — the
-    carried ``last_url`` handles groups spanning Arrow batches."""
+def _extract_map(cfg: EngineConfig):
+    """Vectorized extract (E2-E3) fused with keep-first-per-url dedup
+    (E13): the input partition is (url, warc_ts)-sorted and
+    url-range-partitioned, so the first row of each url is the earliest
+    copy — the carried ``last_url`` handles groups spanning Arrow
+    batches."""
     last_url_holder = {"u": None}
     want_ml = cfg.extract_meta_links
 
@@ -90,7 +84,7 @@ def _extract_map(cfg: EngineConfig, dedup_sorted: bool = False):
         )
 
         for pdf in batches:
-            if dedup_sorted and len(pdf):
+            if len(pdf):
                 keep = pdf["url"].ne(pdf["url"].shift())
                 if last_url_holder["u"] is not None:
                     keep.iloc[0] = pdf["url"].iloc[0] != last_url_holder["u"]
@@ -175,93 +169,53 @@ def extract_schema(cfg: EngineConfig) -> T.StructType:
 def global_ordinal(df: DataFrame, sort_cols, col_name: str = "_ord",
                    partitions: int = 64) -> DataFrame:
     """Global dense 0-based ordinal in ``sort_cols`` order WITHOUT a
-    single-partition window: range-partition on the sort key, sort
-    within partitions, two-pass per-partition offsets. Exact same
-    ordinals as ``row_number() over (order by sort_cols)`` − 1.
+    single-partition window — the exclusive prefix sum of 1s. Exact same
+    ordinals as ``row_number() over (order by sort_cols)`` − 1."""
+    return global_prefix_sum(df, sort_cols, None, col_name, partitions)
 
-    The range-partitioned input MUST be persisted for correctness —
-    ``repartitionByRange`` samples its boundaries, so both passes have
-    to see one materialization. The result is therefore eagerly
-    localCheckpoint'ed and the intermediate cache released before
-    returning (callers repeatedly invoking this must not accumulate
-    session-lifetime cache blocks). This is THE shared implementation
-    of the idiom — analytics ranks, flat export renumbering, and
-    doc-id assignment all route here."""
-    parts = max(1, partitions)
+
+def global_prefix_sum(df: DataFrame, sort_cols, value_col: Optional[str],
+                      col_name: str = "_prefix",
+                      partitions: int = 64) -> DataFrame:
+    """EXCLUSIVE global prefix sum of ``value_col`` (1 per row when None)
+    in ``sort_cols`` order, without a single-partition window: row i
+    gets sum(value of all rows strictly before it). Exact same values as
+    ``sum(value) over (order by sort_cols rows between unbounded
+    preceding and 1 preceding)`` with nulls-as-zero.
+
+    Range-partition + in-partition sort, then
+    :func:`_add_partition_offset_ids`. ``repartitionByRange`` samples
+    its boundaries, so the ranged input is persisted across the two
+    passes and the result eagerly localCheckpoint'ed before that cache
+    is released (callers invoking this repeatedly must not accumulate
+    session-lifetime cache blocks)."""
     ranged = (
-        df.repartitionByRange(parts, *sort_cols)
+        df.repartitionByRange(max(1, partitions), *sort_cols)
         .sortWithinPartitions(*sort_cols)
         .persist()
     )
-    out = _add_partition_offset_ids(df.sparkSession, ranged,
-                                    col_name=col_name)
-    out = out.localCheckpoint(eager=True)
+    out = _add_partition_offset_ids(
+        df.sparkSession, ranged, col_name, value_col
+    ).localCheckpoint(eager=True)
     ranged.unpersist()
     return out
 
 
 def _add_partition_offset_ids(spark: SparkSession, ranged: DataFrame,
-                              col_name: str = "doc_id") -> DataFrame:
-    """Two-pass dense ordinal ids over an already-sorted, persisted
-    frame: per-partition counts → broadcast offsets → ordinal add."""
-    counts = (
-        ranged.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .count()
-        .collect()
-    )
-    offsets = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-
-    out_schema = T.StructType(
-        [T.StructField(col_name, T.LongType(), False)] + list(ranged.schema.fields)
-    )
-
-    def add_ids(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = offsets.get(pid, 0)
-        seen = 0
-        for pdf in batches:
-            ids = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
-            seen += len(pdf)
-            pdf = pdf.copy()
-            pdf.insert(0, col_name, ids)
-            yield pdf
-
-    return ranged.mapInPandas(add_ids, schema=out_schema)
-
-
-def global_prefix_sum(df: DataFrame, sort_cols, value_col: str,
-                      col_name: str = "_prefix",
-                      partitions: int = 64) -> DataFrame:
-    """EXCLUSIVE global prefix sum of ``value_col`` in ``sort_cols``
-    order, without a single-partition window — the running-total twin
-    of :func:`global_ordinal` (same two-pass shape: range-partition +
-    in-partition sort, per-partition totals collected to the driver
-    (one row per partition), broadcast offsets, in-partition cumsum).
-    Row i gets sum(value of all rows strictly before it). Exact same
-    values as ``sum(value) over (order by sort_cols rows between
-    unbounded preceding and 1 preceding)`` with nulls-as-zero.
-
-    Same persistence contract as global_ordinal: the range partitioning
-    samples boundaries, so the input is persisted across the two passes
-    and the result eagerly localCheckpoint'ed before the cache is
-    released."""
-    parts = max(1, partitions)
-    ranged = (
-        df.repartitionByRange(parts, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .persist()
-    )
+                              col_name: str = "doc_id",
+                              value_col: Optional[str] = None) -> DataFrame:
+    """THE two-pass offset kernel, over a sorted frame whose partitions
+    are stable across passes: per-partition totals of ``value_col``
+    (nulls as 0; 1 per row when None, which makes the result a dense
+    ordinal) collected to the driver → offsets → in-partition exclusive
+    cumsum as the new first column ``col_name``. Doc-id assignment,
+    analytics ranks, export renumbering, sequence packing and text-line
+    numbering all route here."""
+    v = F.lit(1) if value_col is None else F.coalesce(F.col(value_col), F.lit(0))
     sums = (
         ranged.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
-        .agg(F.sum(F.coalesce(F.col(value_col), F.lit(0))).alias("s"))
+        .agg(F.sum(v).alias("s"))
         .collect()
     )
     offsets = {}
@@ -271,41 +225,42 @@ def global_prefix_sum(df: DataFrame, sort_cols, value_col: str,
         acc += int(row["s"] or 0)
 
     out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(col_name, T.LongType(), False)]
+        [T.StructField(col_name, T.LongType(), False)] + list(ranged.schema.fields)
     )
 
-    def add_prefix(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def add_offsets(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        running = offsets.get(pid, 0)
+        running = offsets.get(TaskContext.get().partitionId(), 0)
         for pdf in batches:
-            v = pdf[value_col].fillna(0).to_numpy(dtype=np.int64)
+            if value_col is None:
+                v = np.ones(len(pdf), dtype=np.int64)
+            else:
+                v = pdf[value_col].fillna(0).to_numpy(dtype=np.int64)
             cs = np.cumsum(v)
             pdf = pdf.copy()
-            pdf[col_name] = running + cs - v
+            pdf.insert(0, col_name, running + cs - v)
             running += int(cs[-1]) if len(v) else 0
             yield pdf
 
-    out = ranged.mapInPandas(add_prefix, schema=out_schema)
-    out = out.localCheckpoint(eager=True)
-    ranged.unpersist()
-    return out
+    return ranged.mapInPandas(add_offsets, schema=out_schema)
 
 
 def build_docs(
     spark: SparkSession, pages: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
-    """dedup + extract + deterministic doc_id in ONE full-data shuffle.
+    """dedup + extract + deterministic doc_id in ONE full-data shuffle —
+    the head of both ``build_index`` and a streaming epoch (which
+    offsets the ids by its high-water mark). Ids are dense from 0 in
+    url order.
 
     The url-range repartition both (a) co-locates every copy of a url —
     so keep-first dedup (E13) runs inside the sorted partition stream,
     fused with extraction in a single Arrow pass — and (b) is the exact
-    partitioning the two-pass dense doc-id assignment needs. The old
-    shape (window-dedup shuffle, extract, then a second range shuffle)
-    moved the full text column across the cluster twice; this moves it
-    once. At 10^12 docs that is the difference between 1× and 2× the
-    corpus through the shuffle service."""
+    partitioning the two-pass dense doc-id assignment needs, so the
+    full text column crosses the cluster once. At 10^12 docs that is
+    the difference between 1× and 2× the corpus through the shuffle
+    service."""
     if cfg.normalize_urls:
         # E12 (url_manager.py:57-85): defrag + scheme default + lowercase
         # as a pure column expression BEFORE the dedup shuffle, so
@@ -323,38 +278,40 @@ def build_docs(
     ranged = pages.repartitionByRange(parts, "url").sortWithinPartitions(
         *sort_cols
     )
-    schema = extract_schema(cfg)
-    from pyspark import StorageLevel
-
-    # DISK_ONLY persist: the two-pass id assignment replays this frame
-    # once; serialized blocks on spark.local.dir (tmpfs in the bench)
-    # avoid the SQL columnar-cache's on-heap allocation churn, which
-    # measured 3-4x wall-clock variance on large corpora.
-    extracted = ranged.mapInPandas(
-        _extract_map(cfg, dedup_sorted=True), schema=schema
-    ).persist(StorageLevel.DISK_ONLY)
-    return _add_partition_offset_ids(spark, extracted)
+    extracted = ranged.mapInPandas(_extract_map(cfg), schema=extract_schema(cfg))
+    # The id passes read this frame twice over sampled range boundaries,
+    # so both read one eager local checkpoint. DISK_ONLY: serialized
+    # blocks on spark.local.dir avoid the SQL columnar cache's on-heap
+    # allocation churn (3-4x wall-clock variance on large corpora), and
+    # unlike a persist the checkpoint registers no cache entry, so a
+    # build leaves the session's cache alone; its blocks go with the
+    # frame.
+    return _add_partition_offset_ids(
+        spark,
+        extracted.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY),
+    )
 
 
 def build_docmeta(docs: DataFrame, postings: DataFrame) -> DataFrame:
-    """docmeta = docs ⋈ per-doc token stats derived from postings (B3):
-    doc_len = Σtf (total tokens, BM25 |d|), unique_terms = #distinct
-    terms (the reference's Document.length, inverted_index.cpp:99-100).
+    """docmeta = the caller's ``docs`` columns + per-doc token stats
+    derived from ``docs``' postings (B3): doc_len = Σtf (total tokens,
+    BM25 |d|), unique_terms = #distinct terms (the reference's
+    Document.length, inverted_index.cpp:99-100).
 
-    Deliberately EXCLUDES the text column: text lives once, in the
-    ``docs`` stage; duplicating it here would double the corpus at rest
-    (terabytes at 10^12 docs). Snippets join ``docs`` on the k hit rows.
-    """
+    ``build_index`` passes (doc_id, url, title, lang): text lives once,
+    in the ``docs`` stage, since duplicating it here would double the
+    corpus at rest (terabytes at 10^12 docs); snippets join ``docs`` on
+    the k hit rows. A streaming epoch passes ``text`` too, so a segment
+    is docmeta + postings alone; ``text`` then goes last."""
     stats = postings.groupBy("doc_id").agg(
         F.sum("tf").alias("doc_len"), F.count("*").alias("unique_terms")
     )
-    return (
-        docs.join(stats, "doc_id", "left")
-        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)).cast("long"))
-        .withColumn(
-            "unique_terms", F.coalesce(F.col("unique_terms"), F.lit(0)).cast("long")
-        )
-        .select("doc_id", "url", "title", "lang", "doc_len", "unique_terms")
+    text = ["text"] if "text" in docs.columns else []
+    return docs.join(stats, "doc_id", "left").select(
+        *[c for c in docs.columns if c != "text"],
+        F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"),
+        F.coalesce("unique_terms", F.lit(0)).cast("long").alias("unique_terms"),
+        *text,
     )
 
 
@@ -462,59 +419,11 @@ def _tokenize_map_vec(cfg: EngineConfig):
     return fn
 
 
-def _tokenize_map(cfg: EngineConfig):
-    """Postings kernel dispatch: the vectorized path for every config
-    except the (off-by-default) stemmer, whose within-doc stem
-    collisions need the per-doc re-aggregation below."""
-    if not cfg.use_stemmer:
-        return _tokenize_map_vec(cfg)
-    return _tokenize_map_stem(cfg)
-
-
-def _tokenize_map_stem(cfg: EngineConfig):
-    store_pos = cfg.store_positions
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms, doc_ids, tfs, dls, poss = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                stats = list(doc_term_stats(text or "", cfg))
-                doc_len = sum(tf for _, tf, _ in stats)  # total tokens
-                # stems may collide within a doc → re-aggregate
-                merged: dict = {}
-                for term, tf, positions in stats:
-                    e = merged.setdefault(stem_text_token(term), [0, []])
-                    e[0] += tf
-                    e[1].extend(positions)
-                stats = [
-                    (t, tf_ps[0], sorted(tf_ps[1]))
-                    for t, tf_ps in merged.items()
-                ]
-                for term, tf, positions in stats:
-                    terms.append(term)
-                    doc_ids.append(doc_id)
-                    tfs.append(tf)
-                    dls.append(doc_len)
-                    if store_pos:
-                        poss.append(positions)
-            data = {
-                "term": pd.array(terms, dtype=object),
-                "doc_id": np.array(doc_ids, dtype=np.int64),
-                "tf": np.array(tfs, dtype=np.int32),
-                "doc_len": np.array(dls, dtype=np.int64),
-            }
-            if store_pos:
-                data["positions"] = pd.array(poss, dtype=object)
-            yield pd.DataFrame(data)
-
-    return fn
-
-
 def build_postings(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Long-form postings, written as per-partition (term, doc_id) sorted
     runs (north_rule). Column pruning keeps later readers cheap."""
     src = docs.select("doc_id", "text")
-    long = src.mapInPandas(_tokenize_map(cfg), schema=postings_schema(cfg))
+    long = src.mapInPandas(_tokenize_map_vec(cfg), schema=postings_schema(cfg))
     return long.sortWithinPartitions("term", "doc_id")
 
 
@@ -763,7 +672,6 @@ def build_index(
         t0 = time.time()
         store.write_stage("docs", build_docs(spark, pages, cfg), t0)
         timings["docs_s"] = round(time.time() - t0, 3)
-        spark.catalog.clearCache()  # release the doc-id range partitioning
     docs = store.read_stage(spark, "docs")
 
     if not (resume and store.stage_complete("postings")):
@@ -774,7 +682,9 @@ def build_index(
 
     if not (resume and store.stage_complete("docmeta")):
         t0 = time.time()
-        store.write_stage("docmeta", build_docmeta(docs, postings), t0)
+        meta = build_docmeta(docs.select("doc_id", "url", "title", "lang"),
+                             postings)
+        store.write_stage("docmeta", meta, t0)
         timings["docmeta_s"] = round(time.time() - t0, 3)
 
     return finish_index(spark, store, postings, cfg, timings, resume)

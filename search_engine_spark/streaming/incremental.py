@@ -6,9 +6,12 @@ incremental-update CLI as future work (``report/main.tex:1138``). This
 module provides the real thing, Lucene-segment style:
 
 * ``IncrementalIndexer`` — ``readStream`` over a landing directory of
-  `pages` parquet files → ``foreachBatch``: each micro-batch is
-  extracted, tokenized, and appended as a **segment** (docmeta rows +
-  postings rows tagged with ``segment_id``). Doc ids continue from a
+  `pages` parquet files → ``foreachBatch``: each micro-batch (an
+  epoch) drops the urls earlier epochs indexed, then runs the batch
+  build's head — ``index_build.build_docs`` (url normalization,
+  keep-first dedup, extraction, dense url-ordered ids) →
+  ``build_postings`` → ``build_docmeta`` — and appends the result as a
+  **segment** (postings + docmeta with text). Doc ids are offset by a
   high-water mark persisted in ``stream_state.json``; Structured
   Streaming's checkpoint guarantees each input file lands in exactly
   one epoch, so restarts neither skip nor double-index (epoch replays
@@ -71,7 +74,7 @@ PAGES_SCHEMA = T.StructType(
 # query knobs stay free, since the stream scores at query time.
 _SEGMENT_CONFIG = (
     "min_token_bytes", "max_token_bytes", "remove_numbers",
-    "case_folding", "use_stemmer", "store_positions",
+    "case_folding", "store_positions",
     "min_article_length", "normalize_urls",
 )
 
@@ -200,15 +203,17 @@ class IncrementalIndexer:
 
     # -- the foreachBatch body -------------------------------------------
     def _process_batch(self, batch: DataFrame, epoch_id: int) -> None:
+        """One epoch: the seen-url anti-join, then ``build_index``'s head
+        (``build_docs`` → ``build_postings`` → ``build_docmeta``) with
+        the ids offset by ``next_doc_id``, written as one segment."""
         from search_engine_spark.functions.source_parsers import (
             normalize_url_col,
         )
         from search_engine_spark.operators.index_build import (
+            build_docmeta,
+            build_docs,
             build_postings,
-            dedup_pages,
-            extract_schema,
-            global_ordinal,
-            _extract_map,
+            postings_schema,
         )
 
         st = self._read_state()
@@ -221,8 +226,9 @@ class IncrementalIndexer:
         if seg in done:
             return  # replayed epoch, already fully committed
         if self.cfg.normalize_urls:
+            # the seen set holds normalized urls; build_docs normalizes
+            # again, which leaves a normalized url as it is
             batch = batch.withColumn("url", normalize_url_col(F.col("url")))
-        deduped = dedup_pages(batch)
         bucket_col = F.pmod(F.xxhash64(F.col("url")),
                             F.lit(SEEN_BUCKETS)).cast("int")
         seen_dirs = st["seen_dirs"]
@@ -235,7 +241,7 @@ class IncrementalIndexer:
             # at rest — and (b) joins on (url_bucket, url) so the
             # shuffle is bounded by matching buckets, not the full
             # accumulated docmeta (VERDICT r2 #4).
-            with_b = deduped.withColumn("url_bucket", bucket_col)
+            with_b = batch.withColumn("url_bucket", bucket_col)
             batch_buckets = [
                 int(r[0])
                 for r in with_b.select("url_bucket").distinct().collect()
@@ -244,50 +250,33 @@ class IncrementalIndexer:
                 F.col("url_bucket").isin(batch_buckets)
             )
             self._last_seen_scan = seen  # plan-shape tests
-            deduped = with_b.join(
+            batch = with_b.join(
                 seen, ["url_bucket", "url"], "left_anti"
             ).drop("url_bucket")
-        # deterministic dense ids continuing from the high-water mark,
-        # assigned with the SAME two-pass per-partition-offset scheme as
-        # the batch build (url-range partitions stay parallel — the old
-        # coalesce(1) serialized every epoch; a backfill epoch then ran
-        # one task for the whole corpus slice).
-        parts = max(2, min(self.cfg.index_partitions, 64))
-        extracted = deduped.mapInPandas(
-            _extract_map(self.cfg), schema=extract_schema(self.cfg)
+        docs = build_docs(self.spark, batch, self.cfg).select(
+            (F.col("doc_id") + F.lit(int(st["next_doc_id"]))).alias("doc_id"),
+            "url", "title", "lang", "text",
         )
-        assigned = global_ordinal(
-            extracted, [F.col("url").asc()], "doc_id", parts
-        ).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(int(st["next_doc_id"]))
-        )
-        docs = assigned.select("doc_id", "url", "title", "lang", "text")
+        # numbered once, by the count: the stages below read the cached
+        # rows, so no task runs the id pass beside the tokenizer (two
+        # Python workers per task)
         docs.persist()
         n = docs.count()
-        postings = build_postings(docs, self.cfg)
         seg_dir = os.path.join(self.dir, "segments", seg)
         # overwrite → idempotent on epoch replay after a crash.
         # partitionBy(term_bucket) (VERDICT r3 #6): a term-equality
         # search prunes to one bucket directory per segment at rest.
-        self._write_seg_postings(postings, os.path.join(seg_dir, "postings"))
-        stats = postings.groupBy("doc_id").agg(
-            F.sum("tf").alias("doc_len"),
-            F.count("*").alias("unique_terms"),
-        )
-        docs.join(stats, "doc_id", "left").select(
-            "doc_id", "url", "title", "lang",
-            F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"),
-            F.coalesce("unique_terms", F.lit(0)).cast("long").alias(
-                "unique_terms"
-            ),
-            "text",
-        ).write.mode("overwrite").parquet(os.path.join(seg_dir, "docmeta"))
+        self._write_seg_postings(build_postings(docs, self.cfg),
+                                 os.path.join(seg_dir, "postings"))
+        # like build_index, docmeta and the token total read the stages
+        # back from rest rather than re-running their lineage (the
+        # schema covers an epoch whose urls were all seen: no files)
+        postings = self.spark.read.schema(postings_schema(self.cfg)).parquet(
+            os.path.join(seg_dir, "postings"))
+        build_docmeta(docs, postings).write.mode("overwrite").parquet(
+            os.path.join(seg_dir, "docmeta"))
         # running corpus token total: search() derives (n, avgdl) from
-        # the state file instead of re-aggregating all docmeta per query.
-        # batch_len comes from the docmeta parquet JUST written — a
-        # cheap one-column scan — not from a second consumer of the
-        # unpersisted `stats` frame, which would re-execute the whole
-        # build_postings lineage (no subplan sharing; ADVICE r4).
+        # the state file instead of re-aggregating all docmeta per query
         batch_len = (
             self.spark.read.parquet(os.path.join(seg_dir, "docmeta"))
             .agg(F.sum("doc_len"))

@@ -222,3 +222,17 @@ def test_engine_actions_per_route(spark, tmp_path, monkeypatch):
     assert hits == []
     # the hit collect and the caller's, no dictionary scan
     assert seen == [("doc_id", "score"), ("doc_id", "score", "url", "title")], seen
+
+
+def test_build_leaves_open_engine_cached(spark, tmp_path):
+    """Building another index leaves the session's cache alone: an open
+    cached engine's decoded blocks view and docmeta stay registered."""
+    from pyspark import StorageLevel
+
+    eng = SearchEngine(spark, _build(spark, tmp_path))
+    build_index(spark, pages_df(spark, n_docs=40, seed=6),
+                str(tmp_path / "other"), CFG)
+    levels = (eng.blocks.storageLevel, eng.docmeta.storageLevel)
+    eng.blocks.unpersist()
+    eng.docmeta.unpersist()
+    assert StorageLevel.NONE not in levels, levels

@@ -78,6 +78,19 @@ def test_resume_refuses_changed_config(spark, tmp_path):
     assert IndexStore(out).read_manifest()["config"] == cfg.to_dict()
 
 
+def test_config_with_retired_fields_is_refused():
+    """A meta.json written before a field was retired names it: reading
+    the config raises a ValueError that names every unknown field and
+    says to rebuild, instead of the dataclass's TypeError."""
+    old = {**EngineConfig(k1=2.0).to_dict(),
+           "store_raw_postings": False, "remove_punctuation": True}
+    with pytest.raises(ValueError,
+                       match="remove_punctuation, store_raw_postings; rebuild"):
+        EngineConfig.from_dict(old)
+    assert EngineConfig.from_dict(EngineConfig(k1=2.0).to_dict()) == \
+        EngineConfig(k1=2.0)
+
+
 def test_salted_build_semantically_equal_to_unsalted(spark, tmp_path):
     """FIXTURES §6: one term in ~50% of docs; salting must not change
     the decoded index."""

@@ -1,31 +1,42 @@
-"""Every import in bench.py and scripts/*.py resolves.
+"""Every import in bench.py, __spark_entry__.py, scripts/*.py and
+perfbench/*.py resolves, and every name they import from the engine
+exists.
 
 Scripts import lazily, inside functions, so importing a script as a
 module never runs those statements, and bench.py once swallowed a failed
 one in an ``except``. Walking the AST finds each import statement
 wherever it sits; ``find_spec`` resolves the module without running it.
+For ``from search_engine_spark… import name`` the engine module is
+imported and must define ``name`` (or have it as a submodule), so a
+deleted engine function fails here, not first in a benchmark run.
 """
 
 import ast
 import glob
+import importlib
 import importlib.util
 import os
+import warnings
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCRIPTS = [os.path.join(ROOT, "bench.py")] + sorted(
+SCRIPTS = [os.path.join(ROOT, "bench.py"),
+           os.path.join(ROOT, "__spark_entry__.py")] + sorted(
     glob.glob(os.path.join(ROOT, "scripts", "*.py"))
+    + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
 )
 
 
 def _imports(path):
-    with open(path) as f:
+    """(line, module, names imported from it) per import statement."""
+    with open(path) as f, warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the scripts' own escape warnings
         tree = ast.parse(f.read(), path)
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for alias in node.names:
-                yield node.lineno, alias.name
+                yield node.lineno, alias.name, []
         elif isinstance(node, ast.ImportFrom) and node.level == 0:
-            yield node.lineno, node.module
+            yield node.lineno, node.module, [a.name for a in node.names]
 
 
 def _resolves(module: str) -> bool:
@@ -35,14 +46,28 @@ def _resolves(module: str) -> bool:
         return False
 
 
+def _missing(module: str, names: list) -> list:
+    """What of ``module`` and its imported ``names`` does not exist."""
+    if not _resolves(module):
+        return [module]
+    if module.split(".")[0] != "search_engine_spark":
+        return []
+    mod = importlib.import_module(module)
+    return [
+        f"{module}.{n}" for n in names
+        if n != "*" and not hasattr(mod, n) and not _resolves(f"{module}.{n}")
+    ]
+
+
 def test_script_imports_resolve(monkeypatch):
-    monkeypatch.syspath_prepend(ROOT)
-    monkeypatch.syspath_prepend(os.path.join(ROOT, "scripts"))
-    assert len(SCRIPTS) > 1
+    for d in (ROOT, os.path.join(ROOT, "scripts"),
+              os.path.join(ROOT, "perfbench")):
+        monkeypatch.syspath_prepend(d)
+    assert any("perfbench" in p for p in SCRIPTS)
     dangling = [
-        f"{os.path.relpath(path, ROOT)}:{line} {module}"
+        f"{os.path.relpath(path, ROOT)}:{line} {miss}"
         for path in SCRIPTS
-        for line, module in _imports(path)
-        if not _resolves(module)
+        for line, module, names in _imports(path)
+        for miss in _missing(module, names)
     ]
     assert not dangling, dangling

@@ -413,6 +413,70 @@ def test_empty_stream_has_no_hits(spark, tmp_path):
             read()
 
 
+def test_epoch_and_build_index_share_one_head(spark, tmp_path):
+    """An epoch builds its segment with build_index's own head, so the
+    same duplicate-heavy pages give identical (doc_id, url, title, lang,
+    text, doc_len, unique_terms) rows either way: urls normalized before
+    the keep-first dedup (earliest warc_ts, nulls last), html-only pages
+    extracted, a too-short article dropped, ids dense in url order."""
+    from search_engine_spark.operators.index_build import build_index
+    from search_engine_spark.sources.index_store import IndexStore
+
+    cfg = EngineConfig(index_partitions=4, min_article_length=20)
+    t = lambda h: dt.datetime(2024, 1, 1, h)
+    html = lambda title, body: (
+        f"<html><head><title>{title}</title></head>"
+        f"<body><p>{body}</p></body></html>"
+    ).encode("utf-8")
+    long = "длинная статья про индекс и поиск номер "
+    files = [
+        [
+            ("http://x/a", t(5), None, long + "поздняя копия", "ru"),
+            ("http://x/a", None, None, long + "копия без даты", "ru"),
+            ("http://x/b", t(1), html("Бэ", long + "из html"), None, "ru"),
+            ("http://x/c", t(1), None, "коротко", "ru"),
+            ("http://x/d", t(3), None, long + "дэ вторая", "en"),
+        ],
+        [
+            ("http://X/a#f", t(2), None, long + "первая копия", "ru"),
+            ("http://x/a", t(9), None, long + "последняя копия", "ru"),
+            ("http://x/d", t(2), None, long + "дэ первая", "en"),
+            ("http://x/e", t(4), html("Е", long + "только html"), None, ""),
+            ("http://x/e", None, html("Е2", long + "без даты"), None, ""),
+        ],
+    ]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    for rows in files:
+        _write_batch(spark, landing, rows)
+    ixer = IncrementalIndexer(spark, str(tmp_path / "idx"), cfg)
+    ixer.start(landing).awaitTermination(120)
+    cols = ["doc_id", "url", "title", "lang", "text", "doc_len", "unique_terms"]
+    streamed = sorted(tuple(r) for r in ixer.docmeta().select(*cols).collect())
+
+    pages = spark.createDataFrame(files[0] + files[1], schema).repartition(3)
+    store = build_index(spark, pages, str(tmp_path / "batch"), cfg)
+    built = store.read_stage(spark, "docs").join(
+        store.read_stage(spark, "docmeta").drop("url", "title", "lang"),
+        "doc_id",
+    )
+    built = sorted(tuple(r) for r in built.select(*cols).collect())
+
+    assert streamed == built
+    assert [r[:2] for r in built] == [
+        (0, "http://x/a"), (1, "http://x/b"), (2, "http://x/d"),
+        (3, "http://x/e"),
+    ]
+    texts = {r[1]: (r[2], r[4]) for r in built}
+    assert texts["http://x/a"][1].endswith("первая копия")
+    assert texts["http://x/b"] == ("Бэ", long + "из html")
+    assert texts["http://x/d"][1].endswith("дэ первая")
+    assert texts["http://x/e"][0] == "Е"
+    assert all(r[5] > 0 and r[6] > 0 for r in built)
+    assert IndexStore(str(tmp_path / "batch")).read_meta()["n_docs"] == 4
+
+
 def test_streaming_boolean_search_matches_batch(spark, tmp_path):
     """search_query evaluates AND/OR/NOT plus phrase/proximity leaves
     over live segments with the batch engine's score algebra: results
