@@ -21,6 +21,12 @@ numpy-vectorized over a whole Arrow batch of blocks
 (:func:`vb_decode_many`) and runs once per query engine, when its
 decoded blocks view is cached — queries then score the decoded arrays
 with the Column form :func:`bm25_stf_col` in the JVM.
+
+BM25 has one idf, :func:`bm25_idf`, computed on the driver from a
+term's df: the build bakes it into ``max_score``, and every scorer —
+the batch engine, ``more_like_this`` and the streaming indexer —
+multiplies it into :func:`bm25_stf_col` as a literal, so equal
+(n, df, tf, doc_len, avgdl) give bit-identical scores everywhere.
 """
 
 from __future__ import annotations
@@ -158,18 +164,12 @@ def bm25_stf_col(
 
 
 def bm25_idf(n: float, df: float) -> float:
-    """Lucene-style non-negative BM25 idf over ``n`` docs. ``math.log``:
-    the build bakes this value into block ``max_score`` and batch
-    queries pass it as a literal, so scores stay bit-identical with
-    those bounds."""
+    """Lucene-style non-negative BM25 idf over ``n`` docs, the only idf
+    form: the build bakes it into block ``max_score`` and every query
+    passes it to the JVM as a literal. It has no Column form on
+    purpose — JVM ``log`` differs from ``math.log`` by 1 ulp for some
+    (n, df), which would break bit-identity with those bounds."""
     return math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-
-
-def bm25_idf_col(n: float, df: Column) -> Column:
-    """Column form of :func:`bm25_idf`, for scorers that read df from a
-    table. JVM ``log`` may differ from ``math.log`` by 1 ulp, so it must
-    not score against stored ``max_score`` bounds."""
-    return F.log((F.lit(float(n)) - df + 0.5) / (df + 0.5) + 1.0)
 
 
 def build_blocks(

@@ -43,7 +43,7 @@ from __future__ import annotations
 import math
 import time
 from functools import reduce
-from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple, Union
+from typing import Callable, Dict, Iterable, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -387,7 +387,7 @@ class SearchEngine:
         one row per posting, BM25 as a Column expression. ``idf`` is the
         driver's ``codec.bm25_idf`` value (a literal, so scores stay
         bit-identical with the stored ``max_score`` bounds) or a Column
-        over ``blk``'s rows."""
+        picking such literals by ``blk``'s term (``_summed_scores``)."""
         p = blk.select(
             F.lit(idf).alias("idf"), F.explode(F.arrays_zip(*_PAYLOADS)).alias("p")
         )
@@ -397,6 +397,24 @@ class SearchEngine:
         return p.select(
             F.col("p.doc_gaps").alias("doc_id"),
             (F.col("idf") * stf).alias("score"),
+        )
+
+    def _summed_scores(
+        self, idfs: Dict[str, float], pred: Optional[Column] = None
+    ) -> DataFrame:
+        """(doc_id, score) summed per doc over the blocks of the terms of
+        ``idfs`` (term -> idf) that pass ``pred``: one ``term IN (...)``
+        scan, each block scored with its term's idf from a literal map."""
+        blk = self.blocks.filter(F.col("term").isin(list(idfs)))
+        if pred is not None:
+            blk = blk.filter(pred)
+        idf_col = F.create_map(
+            *[F.lit(x) for t, idf in idfs.items() for x in (t, idf)]
+        )[F.col("term")]
+        return (
+            self._block_scores(blk, idf_col)
+            .groupBy("doc_id")
+            .agg(F.sum("score").alias("score"))
         )
 
     def _term_scores(self, term: str, df: Optional[int] = None) -> DataFrame:
@@ -548,18 +566,6 @@ class SearchEngine:
         idfs = {t: self.idf(stats[t][0]) for t in terms}
         if not terms:
             return self._local([], _SCORE_SCHEMA)
-        # per-row idf: a literal term -> idf map looked up by the block's term
-        idf_col = F.create_map(
-            *[F.lit(x) for t in terms for x in (t, idfs[t])]
-        )[F.col("term")]
-
-        def summed(blk: DataFrame) -> DataFrame:
-            return (
-                self._block_scores(blk, idf_col)
-                .groupBy("doc_id")
-                .agg(F.sum("score").alias("score"))
-            )
-
         # per-term top-k blocks, whose rn==1 rows also carry each
         # term's upper bound: at most one memoized metadata job
         self.prefetch_block_meta(terms, k)
@@ -578,9 +584,7 @@ class SearchEngine:
                 for t, ids in p1_by_term.items()
             ],
         )
-        p1_scores = summed(
-            self.blocks.filter(F.col("term").isin(terms)).filter(p1_pred)
-        )
+        p1_scores = self._summed_scores(idfs, p1_pred)
         if allowed is not None:
             p1_scores = p1_scores.join(allowed, "doc_id", "leftsemi")
         topk1 = (
@@ -595,7 +599,7 @@ class SearchEngine:
                 "decoded_blocks": total_blocks,
                 "theta": None,
             }
-            return summed(self.blocks.filter(F.col("term").isin(terms)))
+            return self._summed_scores(idfs)
         theta = topk1[-1]["score"]
         # epsilon slack: (a+b)−a ≠ b in doubles; keeping extra blocks is
         # always safe, pruning a tying block is not
@@ -619,9 +623,7 @@ class SearchEngine:
             ),
             "theta": theta,
         }
-        return summed(
-            self.blocks.filter(F.col("term").isin(terms)).filter(keep_pred)
-        )
+        return self._summed_scores(idfs, keep_pred)
 
     def _and_scores_block_pruned(
         self, terms: List[str], stats: Dict[str, Tuple[int, int]]
@@ -1041,22 +1043,19 @@ class SearchEngine:
 
     # -- V13: more-like-this ----------------------------------------------
     def more_like_this(self, doc_id: int, k: int = 10) -> DataFrame:
-        """The source doc's term set comes from a ``doc_id``-pushed scan of
-        the **docs** stage (sorted by doc_id at rest → parquet min/max
-        row-group skipping) + tokenizing that ONE document driver-side —
-        NOT from ``postings.filter(doc_id == X)``, which is an unpruned
-        full scan of a table partitioned/sorted by (term, salt, doc_id)
-        (round-4 verdict `weak`). The build tokenized this same text, so
-        the sets are identical by construction. Scoring is unchanged: the term set becomes a
-        parquet-pushable ``term IN (...)`` predicate on postings, BM25 is
-        a closed-form column expression over (tf, doc_len, df) — one
-        shuffle (the groupBy), no per-term plans (the reference builds a
-        giant OR query, boolean_search.cpp:242-281)."""
+        """The top-k other docs by the BM25 sum over the source doc's
+        distinct terms — a flat OR of them, scored like every other
+        query. The term set comes from a ``doc_id``-pushed scan of the
+        **docs** stage (sorted by doc_id at rest → parquet min/max
+        row-group skipping) + tokenizing that ONE document driver-side
+        (the build tokenized this same text, so the sets are identical by
+        construction). The terms' idfs come from ``term_stats`` and the
+        scores from the blocks view under a pushed ``term IN (...)``, so
+        the plan is one blocks scan and one shuffle (the per-doc sum);
+        the reference builds a giant OR query instead
+        (boolean_search.cpp:242-281)."""
         from search_engine_spark.functions.tokenizer import tokenize_text
 
-        src = self.postings
-        if src is None:
-            raise RuntimeError("more_like_this requires the postings stage")
         doc_text = (
             self.store.read_stage(self.spark, "docs")
             .filter(F.col("doc_id") == doc_id)
@@ -1065,25 +1064,11 @@ class SearchEngine:
         self._last_mlt_scan = doc_text
         text_rows = doc_text.collect()
         toks = tokenize_text(text_rows[0]["text"] or "", self.cfg) if text_rows else []
-        terms = sorted(set(toks))
-        if not terms:
+        stats = self.term_stats(sorted(set(toks)))
+        idfs = {t: self.idf(df) for t, (df, _) in stats.items()}
+        if not idfs:
             return self._local([], _SCORE_SCHEMA)
-        k1, b = self.cfg.k1, self.cfg.b
-        idf_col = codec.bm25_idf_col(self.n_docs, F.col("df"))
-        stf_col = codec.bm25_stf_col(
-            F.col("tf"), F.col("doc_len"), self.avgdl, k1, b
-        )
-        dict_small = self.dictionary.filter(F.col("term").isin(terms)).select(
-            "term", "df"
-        )
-        scores = (
-            src.filter(F.col("term").isin(terms))
-            .join(F.broadcast(dict_small), "term")
-            .withColumn("s", idf_col * stf_col)
-            .filter(F.col("doc_id") != doc_id)
-            .groupBy("doc_id")
-            .agg(F.sum("s").alias("score"))
-        )
+        scores = self._summed_scores(idfs).filter(F.col("doc_id") != doc_id)
         return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # -- V14: snippet generation ------------------------------------------
@@ -1097,13 +1082,13 @@ class SearchEngine:
         """Top-k with highlighted snippets (boolean_search.cpp:310-396):
         tokenize the hit's text, find the first query-term match, emit a
         ±context_words token window with ``[term]`` highlighting and
-        ellipses. Runs only over the k hit rows (k is tiny), as one
-        Arrow batch joined against the docs stage's stored text."""
+        ellipses. Runs only over the k hit rows (k is tiny), on the
+        driver, against the docs stage's stored text; the result is a
+        local relation in hit order."""
         from search_engine_spark.functions.tokenizer import tokenize_text
 
         ast = qp.parse(query)
         terms = set(qp.extract_terms(ast)) if ast is not None else set()
-        cfg = self.cfg
         hits = self.search(query, k, with_meta=True, meta_filter=meta_filter)
         # text lives in the docs stage only (docmeta is text-free — see
         # index_build.build_docmeta). Push doc_id IN (…) into the docs
@@ -1119,22 +1104,9 @@ class SearchEngine:
         )
         self._last_snippet_scan = docs_text
         text_by_id = {r["doc_id"]: r["text"] for r in docs_text.collect()}
-        with_text_schema = T.StructType(
-            list(hits.schema.fields)
-            + [T.StructField("text", T.StringType(), True)]
-        )
-        with_text = self._local(
-            [tuple(r) + (text_by_id.get(r["doc_id"]),) for r in hit_rows],
-            with_text_schema,
-        )
-
-        out_schema = T.StructType(
-            list(with_text.schema.fields)[:-1]  # drop text
-            + [T.StructField("snippet", T.StringType(), True)]
-        )
 
         def make_snippet(text: Optional[str]) -> str:
-            toks = tokenize_text(text or "", cfg)
+            toks = tokenize_text(text or "", self.cfg)
             # raw display tokens (whitespace split) aligned by best effort:
             # the reference re-tokenizes and highlights normalized tokens
             hit_at = next(
@@ -1143,7 +1115,6 @@ class SearchEngine:
             if hit_at is None:
                 window = toks[: 2 * context_words + 1]
                 lo_ell, hi_ell = False, len(toks) > len(window)
-                lo = 0
             else:
                 lo = max(0, hit_at - context_words)
                 hi = min(len(toks), hit_at + context_words + 1)
@@ -1153,12 +1124,14 @@ class SearchEngine:
             body = " ".join(shown)
             return ("... " if lo_ell else "") + body + (" ..." if hi_ell else "")
 
-        def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["snippet"] = [make_snippet(t) for t in pdf["text"]]
-                yield pdf.drop(columns=["text"])
-
-        return with_text.mapInPandas(fn, schema=out_schema).orderBy(
-            F.desc("score"), F.asc("doc_id")
+        out_schema = T.StructType(
+            list(hits.schema.fields)
+            + [T.StructField("snippet", T.StringType(), True)]
+        )
+        return self._local(
+            [
+                tuple(r) + (make_snippet(text_by_id.get(r["doc_id"])),)
+                for r in hit_rows
+            ],
+            out_schema,
         )

@@ -1,13 +1,12 @@
 """Index persistence: Iceberg-shaped layout on partitioned Parquet.
 
-The north_rule asks for Iceberg tables; no Iceberg runtime jar ships in
-this offline environment, so the store is a thin interface (SURVEY.md
-§7.5): when an Iceberg catalog is configured on the session it writes
-``writeTo(...)`` tables, otherwise it degrades to a directory of
-partitioned Parquet tables with JSON ``meta``/``manifest`` sidecars —
-identical logical layout either way.
+The north_rule asks for Iceberg tables; no Iceberg runtime jar ships
+with the engine, so the store is a thin interface (SURVEY.md §7.5) that
+writes a directory of partitioned Parquet tables with JSON
+``meta``/``manifest`` sidecars — the logical layout an Iceberg table
+per stage would hold.
 
-Layout (parquet fallback)::
+Layout::
 
     index_dir/
       meta.json        engine config + N + avgdl + IndexStats + timings
@@ -35,11 +34,8 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-from search_engine_spark.config import EngineConfig
 
 STAGES = ("docs", "postings", "docmeta", "dictionary", "blocks")
 

@@ -55,17 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from search_engine_spark.functions.codec import bm25_idf_col, bm25_stf_col
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
+from search_engine_spark.functions.codec import bm25_idf, bm25_stf_col
+from search_engine_spark.sources.pages_source import pages_spark_schema
 
 
 # The EngineConfig fields that decide what a segment holds: the
@@ -89,6 +80,11 @@ POSTINGS_BUCKETS = 8
 # Every state with segments carries these keys.
 _STATE_KEYS = ("all_segments", "seen_dirs", "total_doc_len", "config")
 
+_SEEN_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("url_bucket", T.IntegerType(), True),
+])
+
 
 def _term_bucket_col():
     """md5-prefix term bucket as a Column — md5 (not xxhash64) so the
@@ -106,10 +102,6 @@ def _term_bucket_py(term: str) -> int:
 
     digest = hashlib.md5(term.encode("utf-8")).hexdigest()
     return int(digest[:8], 16) % POSTINGS_BUCKETS
-
-
-def _seg_roots(segs: list, stage: str) -> list:
-    return [os.path.join("segments", s, stage) for s in segs]
 
 
 class IncrementalIndexer:
@@ -187,19 +179,34 @@ class IncrementalIndexer:
             json.dump(st, f, indent=1)
         os.replace(tmp, self._state_path)
 
-    def _read_union(self, roots: list) -> DataFrame:
+    def _read_union(self, roots: list,
+                    schema: Optional[T.StructType] = None) -> DataFrame:
         """Union of parquet datasets under the index dir (segment stages
         or seen-url sidecars). Each root is read separately, since
         multi-root partition discovery conflicts, so bucket-partition
-        pruning applies per scan."""
+        pruning applies per scan. The bucket-partitioned datasets need
+        their ``schema``: an epoch whose urls were all seen writes them
+        over zero rows, which leaves no file to infer one from."""
         from functools import reduce
 
         if not roots:
             raise ValueError(f"stream {self.dir} has no segments")
-        parts = [
-            self.spark.read.parquet(os.path.join(self.dir, r)) for r in roots
-        ]
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        parts = [reader.parquet(os.path.join(self.dir, r)) for r in roots]
         return reduce(DataFrame.unionByName, parts)
+
+    def _read_segs(self, segs: list, stage: str) -> DataFrame:
+        """One stage (``postings`` or ``docmeta``) of the segments
+        ``segs``."""
+        from search_engine_spark.operators.index_build import postings_schema
+
+        schema = (
+            postings_schema(self.cfg).add("term_bucket", T.IntegerType())
+            if stage == "postings" else None
+        )
+        return self._read_union(
+            [os.path.join("segments", s, stage) for s in segs], schema
+        )
 
     # -- the foreachBatch body -------------------------------------------
     def _process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -213,7 +220,6 @@ class IncrementalIndexer:
             build_docmeta,
             build_docs,
             build_postings,
-            postings_schema,
         )
 
         st = self._read_state()
@@ -246,7 +252,7 @@ class IncrementalIndexer:
                 int(r[0])
                 for r in with_b.select("url_bucket").distinct().collect()
             ]
-            seen = self._read_union(seen_dirs).filter(
+            seen = self._read_union(seen_dirs, _SEEN_SCHEMA).filter(
                 F.col("url_bucket").isin(batch_buckets)
             )
             self._last_seen_scan = seen  # plan-shape tests
@@ -269,10 +275,8 @@ class IncrementalIndexer:
         self._write_seg_postings(build_postings(docs, self.cfg),
                                  os.path.join(seg_dir, "postings"))
         # like build_index, docmeta and the token total read the stages
-        # back from rest rather than re-running their lineage (the
-        # schema covers an epoch whose urls were all seen: no files)
-        postings = self.spark.read.schema(postings_schema(self.cfg)).parquet(
-            os.path.join(seg_dir, "postings"))
+        # back from rest rather than re-running their lineage
+        postings = self._read_segs([seg], "postings")
         build_docmeta(docs, postings).write.mode("overwrite").parquet(
             os.path.join(seg_dir, "docmeta"))
         # running corpus token total: search() derives (n, avgdl) from
@@ -305,7 +309,7 @@ class IncrementalIndexer:
             # reads O(1) datasets instead of one per historical segment
             merged_rel = os.path.join("seen_base", f"upto_{epoch_id:06d}")
             (
-                self._read_union(seen_dirs)
+                self._read_union(seen_dirs, _SEEN_SCHEMA)
                 .write.mode("overwrite")
                 .partitionBy("url_bucket")
                 .parquet(os.path.join(self.dir, merged_rel))
@@ -322,10 +326,10 @@ class IncrementalIndexer:
             base = f"base_{epoch_id:06d}"
             base_dir = os.path.join(self.dir, "segments", base)
             self._write_seg_postings(
-                self._read_union(_seg_roots(st["segments"], "postings")),
+                self._read_segs(st["segments"], "postings"),
                 os.path.join(base_dir, "postings"),
             )
-            self._read_union(_seg_roots(st["segments"], "docmeta")).write.mode(
+            self._read_segs(st["segments"], "docmeta").write.mode(
                 "overwrite").parquet(os.path.join(base_dir, "docmeta"))
             folded = list(st["segments"])
             st["segments"] = [base]
@@ -357,7 +361,7 @@ class IncrementalIndexer:
         directory and stops (the batch-catchup trigger)."""
         ckpt = checkpoint_dir or os.path.join(self.dir, "_checkpoint")
         stream = (
-            self.spark.readStream.schema(PAGES_SCHEMA)
+            self.spark.readStream.schema(pages_spark_schema())
             .option("maxFilesPerTrigger", 8)
             .parquet(landing_dir)
         )
@@ -370,12 +374,10 @@ class IncrementalIndexer:
         return writer.start()
 
     def docmeta(self) -> DataFrame:
-        segs = self._read_state()["segments"]
-        return self._read_union(_seg_roots(segs, "docmeta"))
+        return self._read_segs(self._read_state()["segments"], "docmeta")
 
     def postings(self) -> DataFrame:
-        segs = self._read_state()["segments"]
-        return self._read_union(_seg_roots(segs, "postings"))
+        return self._read_segs(self._read_state()["segments"], "postings")
 
     def _view(self) -> Optional["_LiveView"]:
         """The committed live segments as queries read them, or None
@@ -430,16 +432,17 @@ class IncrementalIndexer:
 
     def _term_scores_seg(self, view: "_LiveView", term: str) -> DataFrame:
         """One term's (doc_id, score) over the long-form segment
-        postings: bucket-pruned at rest + closed-form BM25 column (the
-        batch engine's ``codec.bm25_stf_col``) with the memoized df as
-        a literal — no per-leaf aggregate or join."""
+        postings: bucket-pruned at rest, then the batch engine's BM25 —
+        ``codec.bm25_idf`` of the memoized df as a literal times
+        ``codec.bm25_stf_col`` — so with the same (n, avgdl) a score is
+        bit-identical to the batch one; no per-leaf aggregate or join."""
         n, avgdl = view.stats
         hits = self._term_hits(view.postings, term)
         self._last_postings_scan = hits  # plan-shape tests
         return hits.select(
             "doc_id",
             (
-                bm25_idf_col(n, F.lit(view.df[term]))
+                F.lit(bm25_idf(n, view.df[term]))
                 * bm25_stf_col(F.col("tf"), F.col("doc_len"), avgdl,
                                self.cfg.k1, self.cfg.b)
             ).alias("score"),
@@ -520,15 +523,14 @@ class IncrementalIndexer:
 class _LiveView:
     """What queries read of one commit of the live segments: the
     ``postings`` and (on first use) ``docmeta`` frames, each read once
-    (a read costs one Parquet footer job per segment); the corpus
-    ``stats`` (n, avgdl) from the state; and ``df``, the term → df memo. ``key`` is
-    the commit: the state's segment list and ``next_doc_id``."""
+    (postings with their schema; docmeta's schema-less read costs one
+    Parquet footer job per segment); the corpus ``stats`` (n, avgdl)
+    from the state; and ``df``, the term → df memo. ``key`` is the
+    commit: the state's segment list and ``next_doc_id``."""
 
     def __init__(self, ixer: IncrementalIndexer, st: dict, key: tuple):
         self.key = key
-        self._read = lambda stage: ixer._read_union(
-            _seg_roots(st["segments"], stage)
-        )
+        self._read = lambda stage: ixer._read_segs(st["segments"], stage)
         self.postings = self._read("postings")
         self.df: dict = {}
         # ids are dense, so n is next_doc_id; avgdl is the running
@@ -554,12 +556,7 @@ def streaming_term_counts(
     """Watermarked windowed term counts over streaming pages: the
     standard late-data-tolerant streaming aggregation (append mode →
     only closed windows are emitted)."""
-    from search_engine_spark.operators.analytics import tokens_df
-
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA).parquet(landing_dir)
-        .withColumn("doc_id", F.lit(0).cast("long"))  # tokens_df contract
-    )
+    stream = spark.readStream.schema(pages_spark_schema()).parquet(landing_dir)
     toks_schema = T.StructType(
         [
             T.StructField("warc_ts", T.TimestampType(), True),
@@ -623,7 +620,7 @@ def streaming_running_term_counts(
 
     from search_engine_spark.functions.tokenizer import tokenize_text
 
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing_dir)
+    stream = spark.readStream.schema(pages_spark_schema()).parquet(landing_dir)
 
     tok_schema = T.StructType([T.StructField("term", T.StringType(), False)])
 

@@ -17,6 +17,13 @@ for three or more distinct terms docs that tie exactly in the oracle
 can differ by an ulp and leave the (score desc, doc_id asc) tie-break.
 For those queries exact oracle ties may come in any order, and any of
 them may be cut at k; every other query must match order exactly.
+``more_like_this`` sums the same way, so it gets the same allowance.
+
+The stream and the batch index share one BM25 (``codec.bm25_idf`` as a
+literal times ``codec.bm25_stf_col``) and the same integer n and
+token total, so their full score sets are bit-identical. The fixture's
+"ff" has df 9 of 48, where JVM ``log`` and ``math.log`` differ by an
+ulp, so an idf computed in the JVM would show.
 """
 
 import os
@@ -38,7 +45,7 @@ CFG = EngineConfig(
     index_partitions=4, block_size=4, wand_min_blocks=2,
     salt_df_threshold=30, salt_buckets=2,
 )
-VOCAB = ("aa", "bb", "cc", "dd", "ee")
+VOCAB = ("aa", "bb", "cc", "dd", "ee", "ff")
 ABSENT = "zz"
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -47,9 +54,11 @@ def _texts():
     rng = random.Random(11)
     weights = (8, 5, 3, 2, 1)  # skewed: "aa" spans many blocks and salts
     templates = [
-        " ".join(rng.choices(VOCAB, weights, k=rng.randint(3, 9)))
+        " ".join(rng.choices(VOCAB[:5], weights, k=rng.randint(3, 9)))
         for _ in range(16)
     ]
+    # "ff" ends three templates: df 9 of 48 docs
+    templates = [t + " ff" if i % 6 == 0 else t for i, t in enumerate(templates)]
     # each template three times: equal (tf, doc_len) → exact score ties
     return [t for t in templates for _ in range(3)]
 
@@ -162,6 +171,46 @@ def test_engines_match_oracle_on_random_queries(engines, ast, k):
     assert got.keys() == full.keys(), ("scores_df", q)
     for d, s in got.items():
         assert abs(s - full[d]) <= 1e-9, ("scores_df", q, d, s, full[d])
+
+
+@given(ast=_asts)
+@example(ast=T("ff"))
+@example(ast=qp.Or(qp.And(T("ff"), T("aa")), qp.Phrase(("bb", "ff"), None)))
+@settings(max_examples=12, deadline=None)
+def test_stream_scores_bit_identical_to_batch(engines, ast):
+    """The stream, ingested in one epoch (so its doc ids are the batch
+    ids), scores every match exactly as the batch ``scores_df`` does."""
+    batch, stream = engines[:2]
+    q = _render(ast)
+    hexed = lambda df: {r["doc_id"]: float.hex(r["score"]) for r in df.collect()}
+    assert hexed(stream.search_query(q, batch.n_docs)) == hexed(
+        batch.scores_df(q)
+    ), q
+
+
+@pytest.mark.parametrize("cached", [True, False])
+def test_more_like_this_matches_oracle(engines, cached):
+    """``more_like_this(d, k)`` ranks the other docs by the sum of the
+    oracle's BM25 over d's distinct terms, on the cached engine (driver
+    directory) and the uncached one (scans)."""
+    oracle = engines[2]
+    eng = engines[0] if cached else engines[3]
+    k = 10
+    for d in (0, 7, 31):
+        terms = sorted(
+            t for t, plist in oracle.postings.items()
+            if any(doc == d for doc, _, _ in plist)
+        )
+        sums: dict = {}
+        for t in terms:
+            for e, s in oracle.term_scores(t).items():
+                if e != d:
+                    sums[e] = sums.get(e, 0.0) + s
+        ranked = sorted(sums.items(), key=lambda x: (-x[1], x[0]))
+        got = [(r["doc_id"], r["score"])
+               for r in eng.more_like_this(d, k).collect()]
+        _assert_ranked(got, ranked, k, ("more_like_this", cached, d),
+                       exact_ties=False)
 
 
 def test_directory_row_bound_covers_salted_blocks(engines):

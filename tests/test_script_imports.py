@@ -71,3 +71,20 @@ def test_script_imports_resolve(monkeypatch):
         for miss in _missing(module, names)
     ]
     assert not dangling, dangling
+
+
+def test_traced_benchmark_call_sites_exist(monkeypatch):
+    """Every query_eval.py statement the traced benchmark attributes jobs
+    to (``perfbench/tracing.py:CALL_SITES``), and every function it
+    counts as a pruned route (``_PRUNED``), is still in the source: a
+    rename there otherwise fails only a traced benchmark run."""
+    monkeypatch.syspath_prepend(os.path.join(ROOT, "perfbench"))
+    import tracing
+
+    from search_engine_spark.operators import query_eval
+
+    sites = set(tracing._query_phase_map(query_eval.__file__).values())
+    stale = set(tracing.CALL_SITES) - sites - {(None, None)}
+    assert not stale, sorted(stale)
+    funcs = {f for f, _ in sites}
+    assert not set(tracing._PRUNED) - funcs, sorted(set(tracing._PRUNED) - funcs)

@@ -557,6 +557,49 @@ def test_stream_view_refreshes_across_commits(spark, tmp_path):
         assert ixer.search("гамма", 20).count() == oracle.df("гамма")
 
 
+def test_epoch_of_seen_urls_keeps_stream_queryable(spark, tmp_path):
+    """An epoch whose urls were all seen leaves its postings and seen
+    sidecar with no files. Later epochs, folds, queries and ``compact``
+    still read them: over urls 0-3, 0-3 again, then 4-7, the stream
+    ranks as a RefIndex over urls 0-7 — also when each epoch past the
+    first folds the empty segment into a base (``segment_compact_after=1``)."""
+    from search_engine_spark.operators.query_eval import SearchEngine
+    from search_engine_spark.oracle.refmodel import RefIndex
+
+    text = lambda i: (
+        f"альфа doc{i} " + "бета " * (i % 3) + ("гамма" if i % 2 else "")
+    )
+    oracle = RefIndex.from_rows(
+        [{"url": u, "title": "", "text": t}
+         for u, _, _, t, _ in _rows(range(8), text)],
+        CFG,
+    )
+    for fold_after in (32, 1):
+        landing = str(tmp_path / f"landing{fold_after}")
+        os.makedirs(landing)
+        ixer = IncrementalIndexer(spark, str(tmp_path / f"idx{fold_after}"),
+                                  CFG, segment_compact_after=fold_after)
+        for ids in (range(0, 4), range(0, 4), range(4, 8)):
+            _write_batch(spark, landing, _rows(ids, text))
+            ixer.start(landing).awaitTermination(120)
+        assert ixer._read_state()["next_doc_id"] == 8
+        out = str(tmp_path / f"compacted{fold_after}")
+        ixer.compact(out)
+        eng = SearchEngine(spark, out)
+        for what, got, q in (
+            ("search_query", ixer.search_query("бета || гамма", 20),
+             "бета || гамма"),
+            ("search", ixer.search("бета", 20), "бета"),
+            ("compact", eng.search("бета || гамма", 20, with_meta=False),
+             "бета || гамма"),
+        ):
+            got = [(r["doc_id"], r["score"]) for r in got.collect()]
+            want = oracle.search(q, 20)
+            assert [d for d, _ in got] == [d for d, _ in want], (what, fold_after)
+            assert all(abs(g - w) <= 1e-9
+                       for (_, g), (_, w) in zip(got, want)), (what, fold_after)
+
+
 def test_stream_query_actions(spark, tmp_path, monkeypatch):
     """The engine-issued actions of a warm stream query: a query whose
     terms are all in the df memo issues no ``collect``/``count``, one
